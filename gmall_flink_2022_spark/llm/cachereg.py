@@ -1,169 +1,89 @@
-"""Shared registry for persisted intermediates whose cache must outlive
-the function that created them (lazy plans returned to the caller).
+"""Shared registry for materialized intermediates whose storage must
+outlive the function that created them (lazy plans returned to the
+caller).
 
-The curation pipelines and the prefix-filter pre-collapse both persist
-frames that several downstream subtrees read; the plans they return are
-LAZY, so the creating function cannot unpersist. This registry gives
-callers one lifecycle surface (r9 ADVICE: the previous module-global
-list was unbounded and unsynchronized):
+The curation pipelines and the dedup pre-collapses materialize frames
+that several downstream subtrees read; the plans they return are lazy,
+so the creating function cannot free that storage itself. This module
+is the one lifecycle surface for it, with one registry list:
 
-- :func:`track` — register a persisted frame (thread-safe; warns once
-  past a soft threshold so a long-lived session that never releases is
-  visibly leaking instead of silently accumulating executor memory);
-- :func:`release_all` — unpersist everything tracked since the last
-  release (bench.py's between-query ``spark.catalog.clearCache()``
-  subsumes it for the bench loop);
-- :func:`cache_scope` — context manager releasing exactly the frames
-  tracked inside the ``with`` body, for composing callers that
-  materialize a pipeline's result and want its intermediates dropped
-  without touching caches owned by an outer scope.
+- :func:`track` — persist a frame and register it (thread-safe; warns
+  once past a soft threshold so a long-lived session that never
+  releases is visibly leaking instead of silently accumulating executor
+  memory);
+- :func:`stage` — the phase boundary of a composed pipeline: run the
+  phase once into an eager ``localCheckpoint`` and register the
+  resulting leaf;
+- :func:`release_all` — free every registered frame: a tracked frame's
+  cache, or a staged frame's checkpoint blocks.
 """
 
 from __future__ import annotations
 
 import threading
 import warnings
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 
 _LOCK = threading.RLock()
+#: every registered frame: persisted (``track``) or checkpointed (``stage``)
 _LIVE: list[DataFrame] = []
-#: checkpoint-leaf frames produced by :func:`stage` — tracked separately
-#: because their blocks are RDD-level cache, invisible to
-#: ``Dataset.unpersist``/``catalog.clearCache`` (r16 VERDICT #5/ADVICE)
-_STAGED: list[DataFrame] = []
 
-#: soft bound: past this many live tracked caches a warning fires (once
-#: per crossing) — the session is accumulating persisted frames without
-#: releasing them
+#: soft bound: past this many live registered frames a warning fires
+#: (once per crossing) — the session is accumulating materialized
+#: intermediates without releasing them
 WARN_THRESHOLD = 32
 
 
-def track(df: DataFrame) -> DataFrame:
-    """Persist ``df`` and register it for a later release."""
-    df = df.persist()
+def _register(df: DataFrame) -> DataFrame:
     with _LOCK:
         _LIVE.append(df)
         if len(_LIVE) == WARN_THRESHOLD + 1:
             warnings.warn(
-                f"llm.cachereg: {len(_LIVE)} persisted intermediates are "
-                "live — call release_all() (or wrap pipeline construction "
-                "in cache_scope()) after materializing results",
+                f"llm.cachereg: {len(_LIVE)} materialized intermediates are "
+                "live — call release_all() after materializing results",
                 ResourceWarning,
                 stacklevel=3,
             )
     return df
 
 
+def track(df: DataFrame) -> DataFrame:
+    """Persist ``df`` and register it for a later release."""
+    return _register(df.persist())
+
+
 def stage(df: DataFrame) -> DataFrame:
-    """Persist ``df`` AND truncate its logical plan (r16 optimization):
-    ``track`` + a lazy ``localCheckpoint``, for multi-consumer PHASE
-    BOUNDARIES in composed pipelines.
+    """Cut a phase boundary: execute ``df`` once into an eager
+    ``localCheckpoint`` and register the checkpointed frame.
 
-    Why both: ``persist`` alone dedupes *execution* (the cache
-    substitutes at physical planning) but every downstream reuse still
-    embeds the full ANALYZED tree — measured at r16 open, the
-    training-shards manifest reached 10,682 analyzed nodes (e 178 ->
-    minhash pairs 1,135 -> final 10,682 by doubling at each reuse), and
-    a 3.5k-row manifest paid ~7 s of driver-side plan construction plus
-    seconds of optimizer/AQE orchestration PER ACTION (guide §3.3:
-    very large plans make planning itself the bottleneck; materialize to
-    truncate). The lazy localCheckpoint turns the frame into a leaf
-    (LogicalRDD) for every consumer, so downstream plans stay a few
-    dozen nodes.
+    Why a checkpoint and not just a persist: ``persist`` dedupes
+    execution, but every downstream reuse still embeds the full analyzed
+    tree — the training-shards manifest reached 10,682 analyzed nodes
+    (doubling at each reuse) and paid ~7 s of driver-side analysis per
+    action. The checkpoint turns the phase into a leaf (``LogicalRDD``)
+    for every consumer, so downstream plans stay a few dozen nodes.
 
-    r17 (r16 ADVICE, medium): ``localCheckpoint(eager=False)`` is only
-    lazy when the checkpointed subtree's physical plan is NON-adaptive —
-    ``AdaptiveSparkPlanExec.execute()`` materializes every upstream
-    shuffle stage to pick its final plan, so under AQE merely BUILDING a
-    staged pipeline ran most of it as jobs (sweeps/tests/plan tooling
-    paid a full extra execution per build; the r16 in-sweep
-    training_shards wall went 42 -> 112 s). The checkpoint subtree is
-    therefore planned with AQE disabled for the duration of this call: a
-    non-adaptive plan's ``execute()`` just assembles the RDD DAG and
-    nothing runs until a real action. The staged PHASE thus executes
-    without AQE (static ``spark.sql.shuffle.partitions`` inside the
-    phase; downstream consumers still plan adaptively over the leaf) —
-    every call site stages a survivors/manifest-grade table where AQE's
-    runtime re-planning has nothing corpus-sized to save. The conf flip
-    is session-scoped and restored immediately; pipeline construction is
-    driver-single-threaded at every call site.
-
-    The persist stays underneath so a REBUILT identical pipeline (the
-    bench runs each entry fn several times) re-materializes the
-    checkpoint FROM the still-live cache instead of recomputing the
-    phase. Checkpoint RDD blocks are registered with this module and
-    freed by :func:`release_all` (r17; previously only driver GC +
-    ContextCleaner could reclaim them). Rows/schema are byte-identical
-    to the plain persist — checkpointing stores exactly what the plan
-    computes."""
-    spark = df.sparkSession
-    key = "spark.sql.adaptive.enabled"
-    old = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    try:
-        # the flip must cover the persist too: CacheManager plans the
-        # cached physical plan at persist() time, and an ADAPTIVE cached
-        # plan re-introduces the eager materialization when the
-        # checkpoint executes through the InMemoryTableScan
-        tracked = track(df)
-        out = tracked.localCheckpoint(eager=False)
-    finally:
-        spark.conf.set(key, old)
-    with _LOCK:
-        _STAGED.append(out)
-    return out
-
-
-def _unpersist_checkpoint(df: DataFrame) -> None:
-    """Drop a staged frame's localCheckpoint RDD blocks. They are
-    RDD-level cache — ``Dataset.unpersist``/``catalog.clearCache`` never
-    see them (r16 VERDICT #5). Best-effort by design: an unmaterialized
-    checkpoint has no blocks, and a plan that is not a checkpoint leaf
-    (unexpected) is left to the ContextCleaner-on-GC fallback."""
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:  # noqa: BLE001 — GC/ContextCleaner fallback stands
-        pass
+    The phase runs here, at build time, planned under the session's own
+    AQE setting (partition coalescing and skew-join splitting apply
+    inside the phase), and never again: later actions read the
+    checkpoint blocks. Rows and schema are those of ``df``.
+    :func:`release_all` frees the blocks; the leaf has no lineage, so a
+    plan that reads it cannot run after the release."""
+    return _register(df.localCheckpoint())
 
 
 def release_all() -> None:
-    """Unpersist every tracked intermediate. Safe at any time for
-    plain ``track``ed frames — a consumer that re-reads a released plan
-    just recomputes it. ``stage``d frames additionally drop their
-    checkpoint blocks, which TRUNCATED their lineage: re-running a plan
-    that reads a released checkpoint leaf raises (blocks gone, no
-    lineage to recompute) — release only after the pipeline's results
-    are materialized, which is what every call site (driver_sim's
-    per-entry release, cache_scope consumers) already does."""
+    """Free every registered frame. A tracked frame is unpersisted — a
+    consumer that re-reads it just recomputes it. A staged frame drops
+    its checkpoint blocks (RDD-level cache, which
+    ``Dataset.unpersist``/``catalog.clearCache`` never see); its lineage
+    was truncated, so re-running a plan that reads it raises. Release
+    only after the pipeline's results are materialized."""
     with _LOCK:
         live, _LIVE[:] = _LIVE[:], []
-        staged, _STAGED[:] = _STAGED[:], []
     for df in live:
-        df.unpersist()
-    for df in staged:
-        _unpersist_checkpoint(df)
-
-
-@contextmanager
-def cache_scope():
-    """Release exactly the caches tracked inside the scope on exit,
-    leaving caches tracked by outer scopes (or other threads that
-    happened to interleave) live. Snapshot-diff rather than index-based
-    so concurrent track/release from other threads stays safe."""
-    with _LOCK:
-        before = {id(df) for df in _LIVE}
-        before_staged = {id(df) for df in _STAGED}
-    try:
-        yield
-    finally:
-        with _LOCK:
-            mine = [df for df in _LIVE if id(df) not in before]
-            _LIVE[:] = [df for df in _LIVE if id(df) in before]
-            mine_staged = [df for df in _STAGED if id(df) not in before_staged]
-            _STAGED[:] = [df for df in _STAGED if id(df) in before_staged]
-        for df in mine:
+        if df.is_cached:
             df.unpersist()
-        for df in mine_staged:
-            _unpersist_checkpoint(df)
+        else:
+            df._jdf.queryExecution().analyzed().rdd().unpersist(False)

@@ -21,27 +21,12 @@ from ..functions.tokenize import tokenize_col
 from .dedup import minhash_lsh_pairs_from_shingles, shingles
 from .text import STOPWORDS
 
-# The pipelines below return LAZY plans over persisted intermediates, so
-# they cannot unpersist in-function (the cache must outlive the return).
-# Callers own the cache lifecycle through llm.cachereg (thread-safe,
-# soft-bounded with a leak warning — r9 ADVICE): after materializing a
-# pipeline's result, call release_caches() / cachereg.release_all() to
-# drop every tracked intermediate, or wrap construction+materialization
-# in cachereg.cache_scope() (bench.py's between-query
-# spark.catalog.clearCache() subsumes it for the bench loop).
+# The pipelines below return plans over registered intermediates
+# (persisted by cachereg.track, or phase boundaries checkpointed by
+# cachereg.stage), so they cannot free that storage in-function. Callers
+# own the lifecycle: after materializing a pipeline's result, call
+# cachereg.release_all().
 from . import cachereg
-
-_persist = cachereg.track
-_stage = cachereg.stage
-cache_scope = cachereg.cache_scope
-
-
-def release_caches() -> None:
-    """Unpersist every intermediate tracked by the LLM pipelines since
-    the last release (curation AND the dedup pre-collapse — one shared
-    registry). Safe to call at any time — a consumer that re-reads a
-    released plan just recomputes it."""
-    cachereg.release_all()
 
 
 def curate(
@@ -87,8 +72,8 @@ def curate(
         .agg(F.min("id").alias("id"))
         .select("id")
     )
-    edocs = _persist(qdocs.join(keep_exact, "id", "left_semi"))
-    sh = _persist(shingles(edocs, "id", "_text", tokens_col="_toks"))
+    edocs = cachereg.track(qdocs.join(keep_exact, "id", "left_semi"))
+    sh = cachereg.track(shingles(edocs, "id", "_text", tokens_col="_toks"))
     pairs = minhash_lsh_pairs_from_shingles(sh, threshold=jaccard_threshold)
     drop_near = pairs.select(F.col("id_b").alias("id")).distinct()
     return edocs.join(drop_near, "id", "left_anti").select("id")
@@ -103,7 +88,7 @@ def curate_full(
     jaccard_threshold: float = 0.4,
     n_contam: int = 6,
 ) -> DataFrame:
-    """The full modern curation pipeline in ONE lazy plan:
+    """The full modern curation pipeline, one plan over one corpus scan:
 
         paragraph-hash dedup (CCNet pass, keep-first, reassemble)
         -> Gopher rule filter on the cleaned text
@@ -120,8 +105,11 @@ def curate_full(
     exact/near dedup cascade, decontamination last (it must see final
     text).
 
-    Scale shape: the cleaned survivors persist once and feed three
-    consumers (digest dedup, shingle table, final anti-joins); the
+    Scale shape: the exact-dedup survivors persist once and feed the
+    shingle table and the near-dup anti-join; the near-dup survivors
+    are a phase boundary (``cachereg.stage``), so building this plan
+    runs everything up to and including MinHash near-dup removal, and
+    the returned plan is the decontamination step over that leaf. The
     benchmark side broadcasts. No stage re-reads the source."""
     from .decontam import contaminated_ids
     from .dedup import minhash_lsh_pairs, paragraph_dedup
@@ -143,17 +131,21 @@ def curate_full(
         .agg(F.min("id").alias("id"))
         .select("id")
     )
-    e = _persist(q.join(keep_exact, "id", "left_semi"))
-    pairs = minhash_lsh_pairs(e, "id", "ctext", threshold=jaccard_threshold)
+    e = cachereg.track(q.join(keep_exact, "id", "left_semi"))
+    # e holds exactly one row per md5(ctext) digest, so its duplicate
+    # fraction is 0 by construction: no HLL pre-dedup probe
+    pairs = minhash_lsh_pairs(
+        e, "id", "ctext", threshold=jaccard_threshold, pre_dedup=False
+    )
     drop_near = pairs.select(F.col("id_b").alias("id")).distinct()
-    # _stage (r16): the near-dup survivors are the pipeline's widest
+    # stage() (r16): the near-dup survivors are the pipeline's widest
     # fan-out point (decontamination shingles, the final anti-join, and
     # every consumer training_shards adds) — plan-truncate here or the
     # analyzed tree doubles per consumer (measured: the shards manifest
     # reached 10,682 analyzed nodes and ~7 s of per-action driver
     # analysis; guide §3.3). Placement measured against staging e /
     # packed-only / samp-only variants — (d, samp, packed) won.
-    d = _stage(e.join(drop_near, "id", "left_anti"))
+    d = cachereg.stage(e.join(drop_near, "id", "left_anti"))
     # 6-gram contamination test (the GPT-3 13-gram filter's spirit; 3-grams
     # over this synthetic 64-word vocabulary collide on unrelated docs)
     bad = contaminated_ids(
@@ -179,7 +171,7 @@ def training_shards(
     n_shards: int = 8,
 ) -> DataFrame:
     """The composed training-shard export — the artifact a training run
-    actually consumes, as ONE lazy plan over a single corpus scan:
+    actually consumes, as one plan over a single corpus scan:
 
         curate_full (paragraph dedup -> Gopher -> exact dedup ->
                      MinHash near-dup -> decontamination)
@@ -193,11 +185,13 @@ def training_shards(
     shuffle_rank) — the shard manifest; the registry entry writes it
     shard-partitioned and reads it back (the consumer layout). Every
     stage operates on the text the previous stage produced, which is
-    exactly what the end-to-end oracle replays. The survivors persist
-    once inside curate_full; the mixture/pack/shuffle stages add one
-    window shuffle (pack) + two id-grain joins over the (small)
-    surviving set — at 100 TB the corpus-sized work all happens before
-    the sample gate."""
+    exactly what the end-to-end oracle replays. Building it runs three
+    phase boundaries (``cachereg.stage``): curate_full's near-dup
+    survivors, the mixture sample and the packed rows; the returned
+    plan is the manifest joins over those leaves. The mixture/pack/
+    shuffle stages add one window shuffle (pack) + two id-grain joins
+    over the (small) surviving set — at 100 TB the corpus-sized work
+    all happens before the sample gate."""
     from .packing import sequence_pack
     from .sampling import mixture_sample, shuffle_order
 
@@ -210,14 +204,14 @@ def training_shards(
             F.coalesce(lang_df["lang"], F.lit("unknown")).alias("lang"),
         )
     )
-    # _stage x2 (r16, guide §3.3): samp feeds the pack AND the final
+    # stage() x2 (r16, guide §3.3): samp feeds the pack AND the final
     # lang join; packed feeds the shuffle ranking AND the manifest join
     # — without truncation the manifest tree quadruples samp's (2,659 ->
     # 10,682 analyzed nodes) and every bench rep re-analyzed it all
-    samp = _stage(
+    samp = cachereg.stage(
         mixture_sample(lng, "lang", "id", rates or {"en": 0.5, "zh": 1.0}, default)
     )
-    packed = _stage(
+    packed = cachereg.stage(
         sequence_pack(samp, "id", "clean_text", seq_len=seq_len, n_shards=n_shards)
     )
     ordered = shuffle_order(packed.select("id"), "id")
@@ -256,10 +250,10 @@ def curate_ccnet(
 
     # three consumers read the cleaned survivors (the LM probe, the
     # fluent semi-join, the digest dedup) — persist once, same move as
-    # curate()/curate_full() above. (r16: measured a _stage variant —
+    # curate()/curate_full() above. (r16: measured a stage() variant —
     # cleaned's tree is only ~41 nodes, so truncation bought nothing and
     # the per-build checkpoint materialization cost ~0.8 s; reverted.)
-    cleaned = _persist(
+    cleaned = cachereg.track(
         paragraph_dedup(docs, id_col, text_col, window=window)
         .filter(F.col("clean_text") != "")
         .select("id", F.col("clean_text").alias("ctext"))

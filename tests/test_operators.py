@@ -2752,24 +2752,18 @@ def test_funnel_strict_ordering(spark):
         shutil.rmtree(d, ignore_errors=True)
 
 
-def test_cachereg_scope_and_release(spark):
-    """The shared cache registry (r9 ADVICE): track persists, release_all
-    drops everything, cache_scope drops exactly its own frames and
-    leaves outer-scope caches live."""
+def test_cachereg_track_and_release(spark):
+    """The shared cache registry (r9 ADVICE): track persists and
+    release_all drops it; the leak warning fires once past the soft
+    threshold."""
     from gmall_flink_2022_spark.llm import cachereg
 
     cachereg.release_all()  # clean slate
-    outer = cachereg.track(spark.range(10))
-    outer.count()
-    assert outer.is_cached
-    with cachereg.cache_scope():
-        inner = cachereg.track(spark.range(5))
-        inner.count()
-        assert inner.is_cached
-    assert not inner.is_cached and outer.is_cached
+    df = cachereg.track(spark.range(10))
+    df.count()
+    assert df.is_cached
     cachereg.release_all()
-    assert not outer.is_cached
-    # the leak warning fires once past the soft threshold
+    assert not df.is_cached
     import warnings as W
 
     try:
@@ -2782,37 +2776,57 @@ def test_cachereg_scope_and_release(spark):
         cachereg.release_all()
 
 
-def test_cachereg_stage_is_lazy(spark):
-    """r17 (r16 ADVICE, medium): stage() must not run any job at BUILD
-    time. Under AQE, localCheckpoint(eager=False) was not lazy —
-    AdaptiveSparkPlanExec.execute() materializes every upstream shuffle
-    stage — so merely constructing a staged pipeline executed most of
-    it. stage() now plans the checkpoint subtree with AQE off (a
-    non-adaptive plan's execute() just assembles the RDD DAG). Proof:
-    stage a frame whose computation raises BELOW a shuffle — if staging
-    executed upstream stages, the build itself would raise."""
-    from pyspark.sql import functions as F
+def test_cachereg_stage_runs_once_under_aqe(spark):
+    """stage() is one eager localCheckpoint planned under the session's
+    own AQE setting: the phase runs exactly once, at stage() time, and
+    later actions read the checkpoint blocks instead of re-running it.
+    stage() writes no Spark conf, so concurrent callers cannot leave
+    AQE switched off."""
+    import threading
 
     from gmall_flink_2022_spark.llm import cachereg
 
     cachereg.release_all()
-    boom = F.udf(lambda x: 1 // 0, "int")  # raises on ANY evaluated row
+    calls = spark.sparkContext.accumulator(0)
+
+    def bucket(x):
+        calls.add(1)
+        return x % 5
+
+    n = 64
     df = (
-        spark.range(64)
-        .select(boom("id").alias("b"))
+        spark.range(n)
+        .select(F.udf(bucket, "long")("id").alias("b"))
         .groupBy("b")
         .agg(F.count(F.lit(1)).alias("c"))
     )
     try:
-        staged = cachereg.stage(df)  # must not raise: nothing executes
-        import pytest as _pytest
+        staged = cachereg.stage(df)
+        assert calls.value == n  # the phase ran at stage() time
+        assert staged.count() == 5
+        assert sorted(r["c"] for r in staged.collect()) == [12, 13, 13, 13, 13]
+        assert calls.value == n  # ...and never again
 
-        with _pytest.raises(Exception):
-            staged.count()  # the action DOES evaluate the udf
+        errors = []
+
+        def stage_in_thread():
+            try:
+                cachereg.stage(
+                    spark.range(100).groupBy((F.col("id") % 3).alias("g")).count()
+                )
+            except Exception as exc:  # noqa: BLE001 — surfaced below
+                errors.append(exc)
+
+        threads = [threading.Thread(target=stage_in_thread) for _ in range(2)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+        assert not any(t.is_alive() for t in threads)
+        assert not errors
+        assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
     finally:
         cachereg.release_all()
-    # the conf flip is restored even on the non-raising path
-    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
 
 
 def test_cachereg_stage_blocks_released(spark):
@@ -2834,20 +2848,57 @@ def test_cachereg_stage_blocks_released(spark):
     staged = cachereg.stage(
         spark.range(1000).groupBy((F.col("id") % 7).alias("g")).count()
     )
-    assert staged.count() == 7  # materializes checkpoint + persist blocks
+    assert staged.count() == 7
     added = cached_rdd_ids() - base
     assert added, "materialized stage() left no cached blocks to test"
     cachereg.release_all()
     assert not (cached_rdd_ids() & added), (
-        "release_all() left checkpoint/persist blocks live"
+        "release_all() left checkpoint blocks live"
     )
+
+
+def test_cachereg_released_stage_leaf_raises(spark):
+    """The released-leaf contract (r17 VERDICT #3): a staged frame has
+    no lineage below its checkpoint, so once release_all() drops the
+    blocks, re-running a plan that reads it raises instead of silently
+    recomputing."""
+    import pytest as _pytest
+
+    from gmall_flink_2022_spark.llm import cachereg
+
+    cachereg.release_all()
+    staged = cachereg.stage(
+        spark.range(1000).groupBy((F.col("id") % 7).alias("g")).count()
+    )
+    downstream = staged.filter(F.col("count") > 0).select("g")
+    assert downstream.count() == 7
+    cachereg.release_all()
+    with _pytest.raises(Exception, match="Checkpoint block"):
+        downstream.count()
+
+
+def test_curate_full_skips_pre_dedup_probe(spark, sf_dir, monkeypatch):
+    """curate_full's near-dup input keeps one row per content digest,
+    so the HLL pre-dedup probe could only answer no: building the
+    pipeline must not call it."""
+    from gmall_flink_2022_spark.llm import cachereg, dedup
+    from gmall_flink_2022_spark.plans.registry import REGISTRY
+
+    def boom(*a, **k):  # pragma: no cover - should never run
+        raise AssertionError("curate_full probed an exact-deduped frame")
+
+    monkeypatch.setattr(dedup, "_should_pre_dedup", boom)
+    try:
+        out = REGISTRY["llm_curation_pipeline_full"].fn(spark, sf_dir)
+        assert out.count() > 0
+    finally:
+        cachereg.release_all()
 
 
 def test_prefix_jaccard_pre_dedup_releases_via_registry(spark):
     """prefix_jaccard_pairs' pre-collapse persist is tracked in the
-    shared registry, so release_caches() drops it (r9 ADVICE #4)."""
+    shared registry, so cachereg.release_all() drops it (r9 ADVICE #4)."""
     from gmall_flink_2022_spark.llm import cachereg, dedup
-    from gmall_flink_2022_spark.llm.curation import release_caches
 
     cachereg.release_all()
     docs = spark.createDataFrame(
@@ -2860,7 +2911,7 @@ def test_prefix_jaccard_pre_dedup_releases_via_registry(spark):
     with cachereg._LOCK:
         n_live = len(cachereg._LIVE)
     assert n_live >= 1
-    release_caches()
+    cachereg.release_all()
     with cachereg._LOCK:
         assert not cachereg._LIVE
 

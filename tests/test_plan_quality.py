@@ -525,18 +525,17 @@ def test_registry_wide_no_row_python(spark, sf_dir):
 
 
 def test_curation_full_plan_shape(spark, sf_dir):
-    """The flagship pipeline: one lazy plan, survivors materialized once
+    """The flagship pipeline: one plan, survivors materialized once
     and reused by the digest/shingle/anti-join consumers, benchmark side
     broadcast, nothing row-Python.
 
-    r16: the near-dup survivor set is now cachereg.stage()d (persist +
-    plan-truncating lazy localCheckpoint — guide §3.3; the analyzed tree
-    had reached 10k+ nodes and driver-side analysis dominated the
+    r16: the near-dup survivor set is cachereg.stage()d (a
+    plan-truncating eager localCheckpoint — guide §3.3; the analyzed
+    tree had reached 10k+ nodes and driver-side analysis dominated the
     entry's wall), so the reuse leaf in the FINAL plan is the
-    checkpoint's `Scan ExistingRDD`, not an InMemoryTableScan — the
-    persist still backs the checkpoint's own materialization across
-    rebuilt plans. The gate now pins the truncation leaf: if a refactor
-    drops the stage(), the leaf disappears and this fails."""
+    checkpoint's `Scan ExistingRDD`, not an InMemoryTableScan. The gate
+    pins the truncation leaf: if a refactor drops the stage(), the leaf
+    disappears and this fails."""
     p = _plan(spark, sf_dir, "llm_curation_pipeline_full")
     assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
     assert "Scan ExistingRDD" in p  # staged survivor set reused as a leaf
@@ -552,10 +551,10 @@ def test_curation_prestage_plan_shape(spark, sf_dir, monkeypatch):
     untruncated tree) and run the same gates over the ENTIRE plan, so a
     future row-Python or broadcast regression upstream of the checkpoint
     still fails a test."""
-    from gmall_flink_2022_spark.llm import cachereg, curation
+    from gmall_flink_2022_spark.llm import cachereg
     from gmall_flink_2022_spark.sources.io import read_table
 
-    monkeypatch.setattr(curation, "_stage", cachereg.track)
+    monkeypatch.setattr(cachereg, "stage", cachereg.track)
     try:
         plans_to_check = {}
         plans_to_check["curate_full"] = _plan(

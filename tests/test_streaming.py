@@ -491,13 +491,13 @@ def test_curation_release_caches(spark):
               f"word{i}") for i in range(8)],
         "doc_id long, text string",
     )
-    curation.release_caches()  # start from a clean slate
+    cachereg.release_all()  # start from a clean slate
     out = curation.curate(docs)
     assert out.count() > 0
     with cachereg._LOCK:
         cached = list(cachereg._LIVE)
     assert cached and all(d.storageLevel.useMemory for d in cached)
-    curation.release_caches()
+    cachereg.release_all()
     with cachereg._LOCK:
         assert not cachereg._LIVE
     assert all(not d.storageLevel.useMemory for d in cached)

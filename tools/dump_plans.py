@@ -5,8 +5,11 @@ the r16 optimization round's plan-evidence harness:
     python tools/dump_plans.py plans/r16 before entry1 entry2 ...
 
 writes plans/r16/<entry>_before.txt per entry. Streaming-tagged entries
-are skipped (building their DataFrame RUNS the job). Uses the same
-session shape as bench.py so the plans match what the bench executes.
+are skipped (building their DataFrame RUNS the job). Building an entry
+that stages phases (``cachereg.stage``: the curation pipelines) runs
+those phases, and the dumped plan reads them as checkpoint leaves. Uses
+the same session shape as bench.py so the plans match what the bench
+executes.
 """
 
 from __future__ import annotations
