@@ -19,11 +19,6 @@ def to_ts(col: Column | str) -> Column:
     return F.to_timestamp(F.col(col) if isinstance(col, str) else col, FMT)
 
 
-def from_millis(col: Column | str) -> Column:
-    """F2: epoch-millis -> timestamp."""
-    return F.timestamp_millis(F.col(col) if isinstance(col, str) else col)
-
-
 def date_str(col: Column | str) -> Column:
     """F3: DATE_FORMAT(ts, 'yyyy-MM-dd HH:mm:ss')."""
     return F.date_format(F.col(col) if isinstance(col, str) else col, FMT)

@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..llm import dedup, similarity, text, urls as urls_mod
 from ..sources.io import read_table
-from .registry import register
+from .registry import REGISTRY, register
 
 # ---------------------------------------------------------------- SQL shards
 TOKS = "list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), t -> t <> '')"
@@ -2484,14 +2484,7 @@ def llm_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "llm_decontaminate_bloom",
-    oracle=f"""
-    WITH {SHINGLE_CTE}
-    SELECT DISTINCT s.doc_id AS id
-    FROM sh s
-    JOIN (SELECT DISTINCT shingle FROM sh WHERE doc_id % 50 = 0) b
-      ON s.shingle = b.shingle
-    WHERE s.doc_id % 50 <> 0
-    """,
+    oracle=REGISTRY["llm_decontaminate"].oracle,
     survey_ref="extension: decontamination with a BLOOM-BITMAP "
     "prefilter — the benchmark shingle set summarized into an 8 KiB "
     "bitmap embedded as an array literal, so the corpus side shrinks "

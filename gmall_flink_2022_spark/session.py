@@ -5,9 +5,11 @@ Design notes (100 TB posture, tested on local[N]):
   dynamic join-strategy switching replace the reference's hand-pinned
   parallelism (reference pins every job to parallelism 1, e.g.
   gmall-realtime/.../ods/FlinkCDC.java:14 — we let Spark scale out).
-- ``spark.sql.shuffle.partitions`` defaults to the local core count;
-  on a real cluster this is overridden (or left to AQE's
-  ``coalescePartitions.initialPartitionNum``).
+- ``spark.sql.shuffle.partitions`` is pinned to 32 for batch queries
+  (AQE coalesces the small ones at runtime); on a real cluster this is
+  overridden (or left to AQE's ``coalescePartitions.initialPartitionNum``).
+  Streaming queries start with ``DEFAULT_STATE_PARTITIONS`` instead
+  (``streaming/runner.py``).
 - Session timezone pinned to UTC so ``date_format``/``unix_timestamp``
   results are bit-identical to the DuckDB oracle on naive parquet
   timestamps. (The reference hardcodes +8 in DateTimeUtil.java:19; our

@@ -7,11 +7,15 @@ from __future__ import annotations
 import shutil
 
 import pytest
-from pyspark.sql import functions as F
+from pyspark.sql import Window, functions as F
 
 from gmall_flink_2022_spark.operators.dwm import bounce_detect_batch
 from gmall_flink_2022_spark.streaming.bounce_state import bounce_detect_stateful
-from gmall_flink_2022_spark.streaming.runner import run_stream_to_table
+from gmall_flink_2022_spark.streaming.runner import (
+    DEFAULT_STATE_PARTITIONS,
+    run_available_now,
+    run_stream_to_table,
+)
 from gmall_flink_2022_spark.streaming.uv_state import unique_visit_stateful
 
 # (event_id, user_id, ts, event_type): u1 bounces at :00 (next view at :05
@@ -699,10 +703,6 @@ def test_stream_funnel_checkpoint_resume(spark, tmp_path):
     import time
 
     from gmall_flink_2022_spark.streaming.funnel_state import funnel_stateful
-    from gmall_flink_2022_spark.streaming.runner import (
-        DEFAULT_STATE_PARTITIONS,
-        _pinned_shuffle_partitions,
-    )
 
     day = dt.datetime(2024, 5, 3)
 
@@ -726,16 +726,11 @@ def test_stream_funnel_checkpoint_resume(spark, tmp_path):
             .parquet(in_dir)
         )
         out = funnel_stateful(sdf, watermark_delay="4 hours")
-        with _pinned_shuffle_partitions(spark, DEFAULT_STATE_PARTITIONS):
-            q = (
-                out.writeStream.format("parquet")
-                .option("path", out_dir)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            q.awaitTermination()
+        run_available_now(
+            out,
+            lambda w: w.format("parquet").option("path", out_dir).outputMode("append"),
+            checkpoint=ckpt,
+        )
         return spark.read.schema(
             "user_id long, dt string, reached_click boolean, "
             "reached_purchase boolean"
@@ -790,10 +785,6 @@ def test_stream_funnel_hot_user_data_branch_emission(spark, tmp_path):
     import time
 
     from gmall_flink_2022_spark.streaming.funnel_state import funnel_stateful
-    from gmall_flink_2022_spark.streaming.runner import (
-        DEFAULT_STATE_PARTITIONS,
-        _pinned_shuffle_partitions,
-    )
 
     schema = "user_id long, ts timestamp, event_type string"
     in_dir = str(tmp_path / "in")
@@ -830,15 +821,11 @@ def test_stream_funnel_hot_user_data_branch_emission(spark, tmp_path):
                             r["reached_purchase"]))
             )
 
-    with _pinned_shuffle_partitions(spark, DEFAULT_STATE_PARTITIONS):
-        q = (
-            out.writeStream.foreachBatch(capture)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .start()
-        )
-        q.awaitTermination()
+    run_available_now(
+        out,
+        lambda w: w.foreachBatch(capture).outputMode("append"),
+        checkpoint=str(tmp_path / "ckpt"),
+    )
     # exactly the settled day-1 row, emitted in batch 2's data branch —
     # pre-fix, the hot key's settled day either lingered into a trailing
     # timeout batch or (no trailing batch) was lost entirely
@@ -867,10 +854,6 @@ def test_stream_bounce_hot_key_data_branch_emission(spark, tmp_path):
 
     from gmall_flink_2022_spark.streaming.bounce_state import (
         bounce_detect_stateful,
-    )
-    from gmall_flink_2022_spark.streaming.runner import (
-        DEFAULT_STATE_PARTITIONS,
-        _pinned_shuffle_partitions,
     )
 
     schema = "user_id long, event_id long, ts timestamp, is_entry boolean"
@@ -909,15 +892,11 @@ def test_stream_bounce_hot_key_data_branch_emission(spark, tmp_path):
         for r in batch_df.collect():
             emitted.append((batch_id, (r["user_id"], r["event_id"], r["ts"])))
 
-    with _pinned_shuffle_partitions(spark, DEFAULT_STATE_PARTITIONS):
-        q = (
-            out.writeStream.foreachBatch(capture)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .start()
-        )
-        q.awaitTermination()
+    run_available_now(
+        out,
+        lambda w: w.foreachBatch(capture).outputMode("append"),
+        checkpoint=str(tmp_path / "ckpt"),
+    )
     # exactly one bounce — user 1's batch-1 entry — emitted in batch 2
     # (the trigger that delivered its post-gap successor), never in the
     # sentinel batch: a deferred-to-timeout implementation would emit at
@@ -953,10 +932,6 @@ def test_stream_stage1_psl_norm_checkpoint_resume(spark, sf_dir, tmp_path):
     )
     from gmall_flink_2022_spark.sources.dim_store import DimStore
     from gmall_flink_2022_spark.sources.io import read_table
-    from gmall_flink_2022_spark.streaming.runner import (
-        DEFAULT_STATE_PARTITIONS,
-        _pinned_shuffle_partitions,
-    )
 
     docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
     base = _with_url_psl(_variant_texts(docs))  # (doc_id, vtext, url)
@@ -993,15 +968,9 @@ def test_stream_stage1_psl_norm_checkpoint_resume(spark, sf_dir, tmp_path):
             applied.append(batch_id)
             store.upsert(table, batch, pk="_k")
 
-        with _pinned_shuffle_partitions(spark, DEFAULT_STATE_PARTITIONS):
-            q = (
-                agg.writeStream.outputMode("update")
-                .foreachBatch(upsert)
-                .trigger(availableNow=True)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            q.awaitTermination()
+        run_available_now(
+            agg, lambda w: w.outputMode("update").foreachBatch(upsert), checkpoint=ckpt
+        )
         return applied
 
     base.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.parquet(
@@ -1044,3 +1013,211 @@ def test_stream_stage1_psl_norm_checkpoint_resume(spark, sf_dir, tmp_path):
         )
     )
     assert got == want and len(got) > 0
+
+
+def test_runner_leaves_no_temp_dirs_or_views(spark, sf_dir, tmp_path):
+    """Running stream entries leaves no gmall_* dir under the temp dir
+    and no temp view behind: the runner removes the checkpoint it made
+    and the memory sink's view, the entries remove their hop and store
+    dirs. A checkpoint the caller passes is kept."""
+    import glob
+    import os
+    import tempfile
+
+    from gmall_flink_2022_spark.plans.registry import REGISTRY
+
+    def temp_dirs():
+        pattern = os.path.join(tempfile.gettempdir(), "gmall_*")
+        return {d for d in glob.glob(pattern) if os.path.isdir(d)}
+
+    def views():
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    dirs0, views0 = temp_dirs(), views()
+    # a memory sink, a parquet hop into a memory sink, an EOS store
+    for name in (
+        "stream_uv_dropdup",
+        "stream_two_hop_pipeline",
+        "stats_store_idempotent_upsert",
+    ):
+        REGISTRY[name].fn(spark, sf_dir).count()
+    assert temp_dirs() - dirs0 == set()
+    assert views() == views0
+
+    in_dir = str(tmp_path / "in")
+    spark.range(10).write.parquet(in_dir)
+    ckpt = str(tmp_path / "ckpt")
+    out = run_stream_to_table(
+        spark.readStream.schema("id long").parquet(in_dir), "kept_ckpt", checkpoint=ckpt
+    )
+    assert out.count() == 10
+    assert os.listdir(os.path.join(ckpt, "offsets"))
+    assert views() == views0
+
+
+def test_runner_pins_state_partitions_around_start_only(spark, tmp_path):
+    """The state-partition pin covers start() only. While a stateful
+    query runs, its foreachBatch reads the caller session's own
+    spark.sql.shuffle.partitions; the checkpoint still holds
+    DEFAULT_STATE_PARTITIONS state partitions, because start() cloned
+    the session while the pin was set."""
+    import os
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    assert before != str(DEFAULT_STATE_PARTITIONS)
+    in_dir = str(tmp_path / "in")
+    spark.range(40).selectExpr("id % 5 AS k").write.parquet(in_dir)
+    agg = spark.readStream.schema("k long").parquet(in_dir).groupBy("k").count()
+    seen = []
+
+    def probe(batch, batch_id):
+        batch.collect()  # every state partition must commit
+        seen.append(spark.conf.get(key))
+
+    ckpt = str(tmp_path / "ckpt")
+    run_available_now(
+        agg, lambda w: w.outputMode("update").foreachBatch(probe), checkpoint=ckpt
+    )
+    assert seen and set(seen) == {before}
+    assert spark.conf.get(key) == before
+    state = os.listdir(os.path.join(ckpt, "state", "0"))
+    assert len([p for p in state if p.isdigit()]) == DEFAULT_STATE_PARTITIONS
+
+
+def _restart_case(name):
+    """(schema, batch-1 rows, batch-2 rows, stream operator, output mode,
+    settle key width or None for append, batch rendering) for one
+    applyInPandasWithState operator. Batch 2 never holds event time
+    older than batch 1's watermark, so no row is late."""
+    import datetime as dt
+
+    from gmall_flink_2022_spark.operators.dwm import first_event_per_key_per_day
+    from gmall_flink_2022_spark.streaming.decay_state import decay_score_stateful
+    from gmall_flink_2022_spark.streaming.topk_state import keyed_topk_stateful
+
+    t0 = dt.datetime(2024, 1, 1)
+
+    def at(minutes):
+        return t0 + dt.timedelta(minutes=minutes)
+
+    if name == "bounce":
+        rows = [
+            (e, u, dt.datetime.fromisoformat(ts), kind)
+            for e, u, ts, kind in FIXTURE + SENTINEL
+        ]
+        split = dt.datetime(2024, 1, 1, 10, 0, 15)
+        return (
+            "event_id long, user_id long, ts timestamp, event_type string",
+            [r for r in rows if r[2] < split],
+            [r for r in rows if r[2] >= split],
+            lambda s: bounce_detect_stateful(
+                s.select(
+                    "user_id",
+                    "event_id",
+                    "ts",
+                    (F.col("event_type") == "view").alias("is_entry"),
+                ),
+                gap_seconds=GAP,
+                watermark_delay="1 seconds",
+            ),
+            "append",
+            None,
+            lambda df: bounce_detect_batch(
+                df, "user_id", "ts", F.col("event_type") == "view", GAP,
+                tiebreak="event_id",
+            ).select("user_id", "event_id", "ts"),
+        )
+    if name == "unique_visit":
+        return (
+            "user_id long, ts timestamp",
+            [(1, at(8 * 60)), (1, at(9 * 60)), (2, at(12 * 60))],
+            # same day again (no emit), next day, a new user
+            [(1, at(23 * 60)), (1, at(24 * 60 + 1)), (2, at(50 * 60)),
+             (3, at(29 * 60))],
+            unique_visit_stateful,
+            "append",
+            None,
+            lambda df: first_event_per_key_per_day(df, "user_id", "ts"),
+        )
+    if name == "decay":
+        # 20 events for user 7 (more than K=16, so the kept window is
+        # truncated across the restart), interleaved in time
+        ev = [(7, at(i), i, (i * 37) % 1000) for i in range(20)]
+        ev += [(8, at(5), 100, 50), (9, at(30), 101, 70)]
+        w = Window.partitionBy("user_id").orderBy(
+            F.col("ts").desc(), F.col("event_id").desc()
+        )
+        return (
+            "user_id long, ts timestamp, event_id long, cents long",
+            [r for r in ev if r[2] % 2 == 0],
+            [r for r in ev if r[2] % 2 == 1],
+            decay_score_stateful,
+            "update",
+            1,
+            lambda df: df.withColumn("rn", F.row_number().over(w))
+            .filter(F.col("rn") <= 16)
+            .groupBy("user_id")
+            .agg(
+                F.count(F.lit(1)).alias("n_scored"),
+                F.sum(F.col("cents") * F.pow(F.lit(2), 16 - F.col("rn")))
+                .cast("long")
+                .alias("num_q"),
+            ),
+        )
+    assert name == "topk"
+    rows = [("abc"[i % 3], i, (i * 7919) % 101) for i in range(1, 31)]
+    w = Window.partitionBy("key").orderBy("u", "id")
+    return (
+        "key string, id long, u long",
+        [r for r in rows if r[1] % 2 == 1],
+        [r for r in rows if r[1] % 2 == 0],
+        lambda s: keyed_topk_stateful(s, "key", "id", "u", 3),
+        "update",
+        2,
+        lambda df: df.withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= 3)
+        .select("key", "rk", "id"),
+    )
+
+
+@pytest.mark.parametrize("name", ["bounce", "unique_visit", "decay", "topk"])
+def test_stateful_operator_restart_equivalence(spark, tmp_path, name):
+    """Restart equivalence: two file batches, the second after a restart
+    from the checkpoint the caller passes, settle to the same rows as
+    one run over both files and as the batch rendering."""
+    schema, rows1, rows2, op, mode, key_width, batch = _restart_case(name)
+    in_dir = str(tmp_path / "in")
+
+    def run(checkpoint=None):
+        # the single run reads both files in one micro-batch
+        sdf = spark.readStream.schema(schema).parquet(in_dir)
+        got = []
+        run_available_now(
+            op(sdf),
+            lambda w: w.outputMode(mode).foreachBatch(
+                lambda b, _: got.extend(map(tuple, b.collect()))
+            ),
+            checkpoint,
+        )
+        return got
+
+    def settle(rows):
+        if key_width is None:  # append: every row is final
+            return sorted(rows)
+        latest = {r[:key_width]: r for r in rows}  # update: last wins
+        return sorted(latest.values())
+
+    ckpt = str(tmp_path / "ckpt")
+    spark.createDataFrame(rows1, schema).coalesce(1).write.parquet(in_dir)
+    restarted = run(ckpt)
+    spark.createDataFrame(rows2, schema).coalesce(1).write.mode("append").parquet(
+        in_dir
+    )
+    restarted += run(ckpt)
+    single = run()
+    want = sorted(
+        map(tuple, batch(spark.createDataFrame(rows1 + rows2, schema)).collect())
+    )
+    assert settle(restarted) == settle(single) == want
+    assert want

@@ -1,6 +1,7 @@
 #!/usr/bin/env python
-"""Print one JSON line of digests over the registry's entry names and
-oracle SQL, for showing that a refactor left both byte-identical:
+"""Print one JSON line of digests over the registry's entry names, oracle
+SQL and metadata (tags, survey refs, bench flags), for showing that a
+refactor left all of them byte-identical:
 
     python tools/registry_digest.py [repo_dir]
 
@@ -23,15 +24,22 @@ sys.path.insert(0, root)
 from gmall_flink_2022_spark import plans  # noqa: E402
 
 names = list(plans.REGISTRY)
-oracles = [plans.REGISTRY[n].oracle or "" for n in names]
+entries = [plans.REGISTRY[n] for n in names]
+
+
+def digest(parts: list[str]) -> str:
+    return hashlib.sha256("\0".join(parts).encode()).hexdigest()
+
+
 print(
     json.dumps(
         {
             "entries": len(names),
             "names_sha256": hashlib.sha256("\n".join(names).encode()).hexdigest(),
-            "oracles_sha256": hashlib.sha256(
-                "\0".join(oracles).encode()
-            ).hexdigest(),
+            "oracles_sha256": digest([q.oracle or "" for q in entries]),
+            "tags_sha256": digest(["\x1f".join(q.tags) for q in entries]),
+            "survey_refs_sha256": digest([q.survey_ref for q in entries]),
+            "bench_sha256": digest([str(q.bench) for q in entries]),
         }
     )
 )
