@@ -283,9 +283,8 @@ def stream_user_jump(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type",
         )
         in_dir = os.path.join(stage, "in")
-        spark.read.parquet(os.path.join(stage, "data")).coalesce(1).write.parquet(
-            in_dir, mode="overwrite"
-        )
+        data = spark.read.schema(ev.schema).parquet(os.path.join(stage, "data"))
+        data.coalesce(1).write.parquet(in_dir, mode="overwrite")
         sentinel.coalesce(1).write.parquet(in_dir, mode="append")
         sdf = (
             spark.readStream.schema(ev.schema)
@@ -514,10 +513,8 @@ def stream_two_hop_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         hop = os.path.join(stage, "hop_pay_view")
         _run_to_parquet(joined, hop)
         # second job re-reads the hop exactly like PaymentWideApp re-reads
-        # the dwm_order_wide topic
-        hop_stream = spark.readStream.schema(
-            spark.read.parquet(hop).schema
-        ).parquet(hop)
+        # the dwm_order_wide topic, with the schema of the frame that wrote it
+        hop_stream = spark.readStream.schema(joined.schema).parquet(hop)
         agg = (
             hop_stream.groupBy(F.window("pay_ts", "1 hour").alias("w"))
             .agg(
@@ -738,9 +735,11 @@ def stream_two_hop_eos(spark: SparkSession, sf_dir: str) -> DataFrame:
         # trigger late and silently drop it — update mode without a
         # watermark keeps all window state for the bounded replay, same
         # as stats_store_idempotent_upsert.
-        hop_stream = spark.readStream.schema(
-            spark.read.parquet(hop).schema
-        ).option("maxFilesPerTrigger", 1).parquet(hop)
+        hop_stream = (
+            spark.readStream.schema(joined.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(hop)
+        )
         agg = (
             hop_stream
             .groupBy(F.window("pay_ts", "1 hour").alias("w"))
@@ -954,7 +953,7 @@ def stream_two_hop_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
         hop = os.path.join(stage, "hop")
         _run_to_parquet(joined, hop)
         hop_stream = (
-            spark.readStream.schema(spark.read.parquet(hop).schema)
+            spark.readStream.schema(joined.schema)
             .option("maxFilesPerTrigger", 1)
             .parquet(hop)
         )
@@ -973,7 +972,7 @@ def stream_two_hop_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         settled = _run_update_upsert(agg, "two_hop_scale")
         exact = (
-            spark.read.parquet(hop)
+            spark.read.schema(joined.schema).parquet(hop)
             .groupBy(
                 F.date_format(F.date_trunc("hour", "pay_ts"), "yyyy-MM-dd HH:mm:ss").alias("stt")
             )

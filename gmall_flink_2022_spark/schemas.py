@@ -168,6 +168,57 @@ VISITOR_STATS = T.StructType(
     ]
 )
 
+# ------------------------------------------------------------ table catalog
+# The declared schema of every driver-testdata table (<sf_dir>/<name>.parquet).
+# ``sources/io.py`` reads with these, so a scan plans without a schema-
+# inference job; tests/test_table_catalog.py pins them to the files. The
+# timestamp columns are INT64 TIMESTAMP(MICROS, isAdjustedToUTC=false) in
+# every file and load as session-tz TIMESTAMP (UTC-pinned, see session.py).
+def _table(*cols: tuple[str, T.DataType]) -> T.StructType:
+    return T.StructType([T.StructField(n, t) for n, t in cols])
+
+
+_INT, _LONG, _DBL, _STR, _TS = (
+    T.IntegerType(), T.LongType(), T.DoubleType(), T.StringType(), T.TimestampType()
+)
+
+TABLE_SCHEMAS: dict[str, T.StructType] = {
+    "region": _table(("r_regionkey", _INT), ("r_name", _STR)),
+    "nation": _table(("n_nationkey", _INT), ("n_name", _STR), ("n_regionkey", _INT)),
+    "customer": _table(
+        ("c_custkey", _LONG), ("c_name", _STR), ("c_nationkey", _INT),
+        ("c_acctbal", _DBL), ("c_mktsegment", _STR),
+    ),
+    "supplier": _table(
+        ("s_suppkey", _LONG), ("s_name", _STR), ("s_nationkey", _INT), ("s_acctbal", _DBL)
+    ),
+    "part": _table(
+        ("p_partkey", _LONG), ("p_name", _STR), ("p_brand", _STR), ("p_type", _STR),
+        ("p_size", _INT), ("p_retailprice", _DBL),
+    ),
+    "orders": _table(
+        ("o_orderkey", _LONG), ("o_custkey", _LONG), ("o_orderstatus", _STR),
+        ("o_totalprice", _DBL), ("o_orderdate", _TS), ("o_orderpriority", _STR),
+    ),
+    "lineitem": _table(
+        ("l_orderkey", _LONG), ("l_partkey", _LONG), ("l_suppkey", _LONG),
+        ("l_linenumber", _INT), ("l_quantity", _DBL), ("l_extendedprice", _DBL),
+        ("l_discount", _DBL), ("l_tax", _DBL), ("l_returnflag", _STR),
+        ("l_linestatus", _STR), ("l_shipdate", _TS),
+    ),
+    "events": _table(
+        ("event_id", _LONG), ("ts", _TS), ("user_id", _LONG), ("event_type", _STR),
+        ("value", _DBL), ("props", _STR),
+    ),
+    "documents": _table(
+        ("doc_id", _LONG), ("text", _STR), ("lang", _STR), ("source", _STR),
+        ("n_chars", _LONG),
+    ),
+    "embeddings": _table(
+        ("vec_id", _LONG), ("embedding", T.ArrayType(T.FloatType())), ("label", _INT)
+    ),
+}
+
 # status-code constants — common/GmallConstant.java:8-24
 ORDER_STATUS_UNPAID = "1001"
 ORDER_STATUS_PAID = "1002"

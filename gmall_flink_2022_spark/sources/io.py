@@ -6,36 +6,26 @@ pluggable format: tests use parquet dirs / memory sinks, production uses
 Kafka — same transformation code either way (Structured Streaming's
 batch/stream parity).
 
-Scale note: ``read_table`` is a plain ``spark.read.parquet`` so Catalyst
-pushes filters/projections into the scan (check ``PushedFilters`` in
-``.explain``); no caching/collecting happens here.
+Scale note: ``read_table`` and ``read_stream_table`` read with the
+table's declared schema from ``schemas.TABLE_SCHEMAS``, so building a
+scan runs no schema-inference job; Catalyst still pushes
+filters/projections into the scan (check ``PushedFilters`` in
+``.explain``). No caching/collecting happens here.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
+from ..schemas import TABLE_SCHEMAS
 
-# events.parquet carries TIMESTAMP(NANOS) which Spark's vectorized reader
-# rejects; read nanos as long and truncate to micros (same floor semantics
-# as DuckDB's ns->us read, so oracles agree bit-for-bit).
-_NANOS_TABLES = {"events": "ts"}
+TABLES = list(TABLE_SCHEMAS)
 
 
 def _path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
-
-
-def _fix_nanos(df: DataFrame, name: str) -> DataFrame:
-    col = _NANOS_TABLES.get(name)
-    if col and dict(df.dtypes).get(col) == "bigint":
-        df = df.withColumn(col, F.timestamp_micros(F.expr(f"{col} div 1000")))
-    return df
 
 
 _SHIPPED: set[int] = set()
@@ -46,10 +36,14 @@ def _ship_package(spark: SparkSession) -> None:
     operators (applyInPandasWithState fns) pickle by module reference; a
     driver that merely sys.path-inserted the repo leaves workers unable to
     import the module. Shipping a zip via addPyFile puts the package on
-    every worker's path regardless of the driver's cwd/env."""
+    every worker's path regardless of the driver's cwd/env. Workers fetch
+    the zip from the driver while the session runs, so it is removed only
+    when this process exits."""
     sc = spark.sparkContext
     if id(sc) in _SHIPPED:
         return
+    import atexit
+    import pathlib
     import tempfile
     import zipfile
 
@@ -65,6 +59,7 @@ def _ship_package(spark: SparkSession) -> None:
                     if f.endswith(".py"):
                         full = os.path.join(dirpath, f)
                         z.write(full, os.path.relpath(full, parent))
+        atexit.register(pathlib.Path(zpath).unlink, missing_ok=True)
     sc.addPyFile(zpath)
     _SHIPPED.add(id(sc))
 
@@ -73,9 +68,9 @@ def _pin_session_confs(spark: SparkSession) -> None:
     """Runtime-settable confs every query depends on, applied defensively
     because the driver harness builds its own session: UTC so
     date_format/unix_timestamp match the DuckDB oracle on naive
-    timestamps; nanosAsLong so events.parquet (TIMESTAMP NANOS) loads;
-    inferTimestampNTZ disabled so naive parquet timestamps load as
-    session-tz TIMESTAMP (watermark-compatible, oracle-matching);
+    timestamps; inferTimestampNTZ disabled so a naive parquet timestamp
+    that is inferred rather than declared still loads as session-tz
+    TIMESTAMP (watermark-compatible, oracle-matching);
     package shipped to workers for the stateful pandas operators."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     # naive parquet timestamps must load as (UTC) TIMESTAMP, not
@@ -87,32 +82,24 @@ def _pin_session_confs(spark: SparkSession) -> None:
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Batch read of one driver-testdata table."""
+    """Batch read of one driver-testdata table, with its declared schema."""
     _pin_session_confs(spark)
-    if name in _NANOS_TABLES:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    return _fix_nanos(spark.read.parquet(_path(sf_dir, name)), name)
+    return spark.read.schema(TABLE_SCHEMAS[name]).parquet(_path(sf_dir, name))
 
 
-def read_stream_table(
-    spark: SparkSession, sf_dir: str, name: str, schema=None
-) -> DataFrame:
-    """Streaming read of the same table (file source, used with
-    availableNow triggers in tests; swap for format('kafka') in prod)."""
+def read_stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Streaming read of the same table, with the same declared schema
+    (file source, used with availableNow triggers in tests; swap for
+    format('kafka') in prod)."""
     _pin_session_confs(spark)
-    if name in _NANOS_TABLES:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    if schema is None:
-        schema = spark.read.parquet(_path(sf_dir, name)).schema
     # the file stream source lists a DIRECTORY; select just this table's
     # file with a glob filter
-    sdf = (
-        spark.readStream.schema(schema)
+    return (
+        spark.readStream.schema(TABLE_SCHEMAS[name])
         .format("parquet")
         .option("pathGlobFilter", f"{name}.parquet")
         .load(sf_dir)
     )
-    return _fix_nanos(sdf, name)
 
 
 def scratch_dir(prefix: str) -> str:

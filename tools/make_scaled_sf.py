@@ -15,9 +15,9 @@ corpus — near-dup candidate generation is stressed, trivial exact-dup
 shortcuts are not rewarded. Embedding vectors are reused as-is (vec_id
 shifted): ANN bucket occupancy grows 10x, the realistic stress.
 
-Schemas are preserved exactly (parquet format version 2.6 keeps the
-events TIMESTAMP(NANOS) column that sources/io.py special-cases), one
-file per table named <table>.parquet, matching the driver layout.
+Schemas are preserved exactly (the timestamp columns stay INT64
+TIMESTAMP(MICROS), the type schemas.TABLE_SCHEMAS declares), one file
+per table named <table>.parquet, matching the driver layout.
 
 Usage: python tools/make_scaled_sf.py [src_dir] [dst_dir] [factor]
            [--unique-text | --realistic-dups] [--dup-frac=0.1]
