@@ -28,7 +28,7 @@ from pyspark.sql.types import StructType
 from ..llm import dsir, incremental as inc, sketch as sketch_mod, urls
 from ..llm.sampling import _u32
 from ..sources.dim_store import DimStore
-from ..sources.io import read_stream_table, read_table
+from ..sources.io import file_batches, read_stream_table, read_table
 from ..streaming.bounce_state import bounce_detect_stateful
 from ..streaming.eos import IdempotentBatchStore
 from ..streaming.runner import run_available_now, run_stream_to_table
@@ -265,31 +265,24 @@ def stream_product_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_user_jump(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The timeout branch of the CEP pattern only fires when the watermark
     passes a pending entry's deadline; a far-future sentinel event (from a
-    user id outside the data's range) is appended as a second file so
+    user id outside the data's range) replays as a second micro-batch so
     trailing pending entries flush. Both engines exclude the sentinel."""
     ev = read_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "ts", "event_type"
     )
+    sentinel = spark.createDataFrame(
+        [(999999999, -1, "2030-01-01 00:00:00", "click")],
+        "event_id long, user_id long, cts string, event_type string",
+    ).select(
+        "event_id",
+        "user_id",
+        F.to_timestamp("cts").alias("ts"),
+        "event_type",
+    )
     stage = tempfile.mkdtemp(prefix="gmall_uj_in_")
     try:
-        ev.coalesce(4).write.parquet(os.path.join(stage, "data"), mode="overwrite")
-        sentinel = spark.createDataFrame(
-            [(999999999, -1, "2030-01-01 00:00:00", "click")],
-            "event_id long, user_id long, cts string, event_type string",
-        ).select(
-            "event_id",
-            "user_id",
-            F.to_timestamp("cts").alias("ts"),
-            "event_type",
-        )
-        in_dir = os.path.join(stage, "in")
-        data = spark.read.schema(ev.schema).parquet(os.path.join(stage, "data"))
-        data.coalesce(1).write.parquet(in_dir, mode="overwrite")
-        sentinel.coalesce(1).write.parquet(in_dir, mode="append")
         sdf = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
+            file_batches([ev, sentinel], stage)
             .withColumn("is_entry", F.col("event_type") == "view")
             .select("user_id", "event_id", "ts", "is_entry")
         )
@@ -364,25 +357,18 @@ def stream_payment_wide_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = read_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "ts", "event_type"
     )
+    sentinels = spark.createDataFrame(
+        [
+            (999999998, -1, "2030-01-01 00:00:00", "purchase"),
+            (999999999, -1, "2030-01-01 00:00:00", "view"),
+        ],
+        "event_id long, user_id long, cts string, event_type string",
+    ).select(
+        "event_id", "user_id", F.to_timestamp("cts").alias("ts"), "event_type"
+    )
     stage = tempfile.mkdtemp(prefix="gmall_pwo_in_")
     try:
-        in_dir = os.path.join(stage, "in")
-        ev.coalesce(1).write.parquet(in_dir, mode="overwrite")
-        sentinels = spark.createDataFrame(
-            [
-                (999999998, -1, "2030-01-01 00:00:00", "purchase"),
-                (999999999, -1, "2030-01-01 00:00:00", "view"),
-            ],
-            "event_id long, user_id long, cts string, event_type string",
-        ).select(
-            "event_id", "user_id", F.to_timestamp("cts").alias("ts"), "event_type"
-        )
-        sentinels.coalesce(1).write.parquet(in_dir, mode="append")
-        src = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
-        )
+        src = file_batches([ev, sentinels], stage)
         joined = _interval_join(src, "1 seconds", "leftOuter").select(
             "pay_event_id", "view_event_id", "user_id", "pay_ts", "view_ts"
         )
@@ -892,20 +878,13 @@ def session_window_scale_agg(src: DataFrame) -> DataFrame:
 )
 def stream_session_window_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = read_table(spark, sf_dir, "events").select("event_id", "user_id", "ts")
+    sentinel = spark.createDataFrame(
+        [(999999999, -1, "2030-01-01 00:00:00")],
+        "event_id long, user_id long, cts string",
+    ).select("event_id", "user_id", F.to_timestamp("cts").alias("ts"))
     stage = tempfile.mkdtemp(prefix="gmall_sws_in_")
     try:
-        in_dir = os.path.join(stage, "in")
-        ev.coalesce(1).write.parquet(in_dir, mode="overwrite")
-        sentinel = spark.createDataFrame(
-            [(999999999, -1, "2030-01-01 00:00:00")],
-            "event_id long, user_id long, cts string",
-        ).select("event_id", "user_id", F.to_timestamp("cts").alias("ts"))
-        sentinel.coalesce(1).write.parquet(in_dir, mode="append")
-        src = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
-        )
+        src = file_batches([ev, sentinel], stage)
         settled = run_stream_to_table(
             session_window_scale_agg(src),
             _uniq("session_window_scale"),
@@ -1269,32 +1248,17 @@ def stream_llm_gopher_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "llm", "dedup", "incremental"),
 )
 def stream_llm_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob
-    import time
-
     corpus, arr1 = _inc_corpus_arrivals(spark, sf_dir)
     arr2 = arr1.filter(F.col("doc_id") % 3 == 0).select(
         (F.col("doc_id") + 300000).alias("doc_id"), "text"
     )
     stage = tempfile.mkdtemp(prefix="gmall_inc_in_")
     try:
-        in_dir = os.path.join(stage, "in")
-        arr1.coalesce(1).write.parquet(in_dir, mode="overwrite")
-        # push batch-1 files into the past so the file source's
-        # mtime ordering is deterministic even on coarse clocks
-        past = time.time() - 3600
-        for f in glob.glob(os.path.join(in_dir, "*.parquet")):
-            os.utime(f, (past, past))
-        arr2.coalesce(1).write.parquet(in_dir, mode="append")
+        sdf = file_batches([arr1, arr2], os.path.join(stage, "in"))
         # index dir inside the stage so the finally rmtree reclaims it
         store = DimStore(spark, os.path.join(stage, "idx"))
         inc.build_dedup_index(store, corpus)
         out_dir = os.path.join(stage, "out")
-        sdf = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
-        )
         ingest = inc.foreach_batch_ingester(store, out_dir)
         run_available_now(sdf, lambda w: w.foreachBatch(ingest))
         return spark.read.parquet(out_dir).localCheckpoint(eager=True)
@@ -1350,9 +1314,6 @@ def stream_llm_quality_classifier(
 def stream_llm_embed_dedup_incremental(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import glob
-    import time
-
     embs = read_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
@@ -1379,12 +1340,7 @@ def stream_llm_embed_dedup_incremental(
     )
     stage = tempfile.mkdtemp(prefix="gmall_einc_in_")
     try:
-        in_dir = os.path.join(stage, "in")
-        arr1.coalesce(1).write.parquet(in_dir, mode="overwrite")
-        past = time.time() - 3600
-        for f in glob.glob(os.path.join(in_dir, "*.parquet")):
-            os.utime(f, (past, past))
-        arr2.coalesce(1).write.parquet(in_dir, mode="append")
+        sdf = file_batches([arr1, arr2], os.path.join(stage, "in"))
         # index dir inside the stage so the finally rmtree reclaims it
         store = DimStore(spark, os.path.join(stage, "idx"))
         kw = dict(
@@ -1393,11 +1349,6 @@ def stream_llm_embed_dedup_incremental(
         )
         inc.build_embed_index(store, corpus, "vec_id", "embedding", **kw)
         out_dir = os.path.join(stage, "out")
-        sdf = (
-            spark.readStream.schema("vec_id long, embedding array<float>")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
-        )
         ingest = inc.foreach_batch_embed_ingester(
             store, out_dir, threshold=_EINC_THRESH, **kw
         )
@@ -1426,9 +1377,6 @@ def stream_llm_embed_dedup_incremental(
 def stream_llm_dup_clusters_incremental(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import glob
-    import time
-
     ids = read_table(spark, sf_dir, "documents").select("doc_id")
     b0 = ids.filter(F.col("doc_id") % 7 == 0).select(
         F.col("doc_id").alias("id_a"), (F.col("doc_id") + 1).alias("id_b")
@@ -1444,25 +1392,8 @@ def stream_llm_dup_clusters_incremental(
     )
     stage = tempfile.mkdtemp(prefix="gmall_clstream_")
     try:
-        in_dir = os.path.join(stage, "in")
-        b0.coalesce(1).write.parquet(in_dir, mode="overwrite")
-        past = time.time() - 7200
-        for f in glob.glob(os.path.join(in_dir, "*.parquet")):
-            os.utime(f, (past, past))
-        b1.coalesce(1).write.parquet(in_dir, mode="append")
-        newer = [
-            f for f in glob.glob(os.path.join(in_dir, "*.parquet"))
-            if os.path.getmtime(f) > past + 1
-        ]
-        for f in newer:
-            os.utime(f, (past + 3600, past + 3600))
-        b2.coalesce(1).write.parquet(in_dir, mode="append")
+        sdf = file_batches([b0, b1, b2], os.path.join(stage, "in"))
         store = DimStore(spark, os.path.join(stage, "map"))
-        sdf = (
-            spark.readStream.schema("id_a long, id_b long")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
-        )
         update = inc.foreach_batch_cluster_updater(store)
         run_available_now(sdf, lambda w: w.foreachBatch(update))
         return inc.read_cluster_map(store).localCheckpoint(eager=True)
@@ -2314,22 +2245,13 @@ def stream_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = read_table(spark, sf_dir, "events").select(
         "user_id", "ts", "event_type"
     )
+    sentinel = spark.createDataFrame(
+        [(-1, "2030-01-01 00:00:00", "click")],
+        "user_id long, cts string, event_type string",
+    ).select("user_id", F.to_timestamp("cts").alias("ts"), "event_type")
     stage = tempfile.mkdtemp(prefix="gmall_funnel_in_")
     try:
-        in_dir = os.path.join(stage, "in")
-        ev.coalesce(1).write.parquet(in_dir, mode="overwrite")
-        sentinel = spark.createDataFrame(
-            [(-1, "2030-01-01 00:00:00", "click")],
-            "user_id long, cts string, event_type string",
-        ).select(
-            "user_id", F.to_timestamp("cts").alias("ts"), "event_type"
-        )
-        sentinel.coalesce(1).write.parquet(in_dir, mode="append")
-        sdf = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
-        )
+        sdf = file_batches([ev, sentinel], stage)
         out = funnel_stateful(sdf, watermark_delay="1 seconds")
         settled = run_stream_to_table(
             out, _uniq("funnel"), output_mode="append"
@@ -2454,19 +2376,11 @@ def _run_training_ingest(
     try:
         idx = DimStore(spark, os.path.join(stage, "idx"))
         inc.build_dedup_index(idx, corpus)
-        in_dir = os.path.join(stage, "in")
-        arr.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.parquet(
-            in_dir, mode="overwrite"
-        )
-        arr.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.parquet(
-            in_dir, mode="append"
+        sdf = file_batches(
+            [arr.filter(F.col("doc_id") % 2 == i) for i in (0, 1)],
+            os.path.join(stage, "in"),
         )
         shard_store = IdempotentBatchStore(spark, os.path.join(stage, "shards"))
-        sdf = (
-            spark.readStream.schema(arr.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
-        )
         fn = foreach_batch_training_ingest(idx, shard_store, bench)
         run_available_now(prep(sdf), lambda w: w.foreachBatch(fn))
         # batch column dropped: the surviving SET is order-independent

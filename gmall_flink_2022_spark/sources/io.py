@@ -11,11 +11,21 @@ table's declared schema from ``schemas.TABLE_SCHEMAS``, so building a
 scan runs no schema-inference job; Catalyst still pushes
 filters/projections into the scan (check ``PushedFilters`` in
 ``.explain``). No caching/collecting happens here.
+
+Replay order: the reference's layers read ordered Kafka topics; the
+stand-in is the parquet file source, which replays files in mtime order
+and breaks mtime ties arbitrarily. ``file_batches`` is the one place
+that stages frames as a stream: it lands each frame as one file, stamps
+the files with strictly increasing mtimes, and reads them back one file
+per micro-batch, so the replay order is the landing order on any clock.
 """
 
 from __future__ import annotations
 
+import glob
 import os
+import time
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -99,6 +109,35 @@ def read_stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         .format("parquet")
         .option("pathGlobFilter", f"{name}.parquet")
         .load(sf_dir)
+    )
+
+
+def file_batches(frames: Sequence[DataFrame], in_dir: str) -> DataFrame:
+    """Replay ``frames`` as a stream: one micro-batch per frame, in list
+    order. Each frame is appended under ``in_dir`` as one ``coalesce(1)``
+    parquet file, and the new files get mtimes 1 s apart that start
+    after the newest file already there, so a second call on the same
+    directory (after a restart, say) replays after the first call's
+    files. The file source orders by mtime and breaks ties arbitrarily;
+    whole seconds survive a filesystem that keeps no finer stamps. Never
+    sleeps.
+
+    ``in_dir`` must be a local path: ``os.utime`` does not reach object
+    stores, whose mtime is the upload time."""
+    files = os.path.join(in_dir, "*.parquet")
+    old = set(glob.glob(files))
+    newest = max(map(os.path.getmtime, old), default=time.time() - len(frames))
+    for i, frame in enumerate(frames, 1):
+        frame.coalesce(1).write.parquet(in_dir, mode="append")
+        new = set(glob.glob(files)) - old
+        stamp = int(newest) + i
+        for f in new:
+            os.utime(f, (stamp, stamp))
+        old |= new
+    return (
+        frames[0].sparkSession.readStream.schema(frames[0].schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(in_dir)
     )
 
 

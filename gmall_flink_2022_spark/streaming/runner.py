@@ -6,7 +6,11 @@ streaming plans to completion with ``availableNow`` triggers — identical
 code path to production (real source, real trigger, real state stores),
 different endpoints. Every streaming entry goes through
 ``run_available_now``; only its sink differs (memory table, a
-``foreachBatch`` store, or a parquet hop). Multi-sink fan-out (SURVEY
+``foreachBatch`` store, or a parquet hop). It returns the finished
+``StreamingQuery``, whose ``recentProgress`` holds the per-batch
+metrics (rows, watermark, state rows, ``numRowsDroppedByWatermark``).
+Staged inputs replay in the order ``sources.io.file_batches`` landed
+them, one file per micro-batch. Multi-sink fan-out (SURVEY
 §7.3 #3) = one query per sink over the shared source; with Kafka/files
 the replay is free, no persist() needed.
 
@@ -36,7 +40,7 @@ import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming import DataStreamWriter
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 #: Local-mode default sized for bench/driver SFs (state ≪ 1 GB). A real
 #: deployment passes an explicit value sized to keys × state row width.
@@ -49,10 +53,11 @@ def run_available_now(
     sdf: DataFrame,
     sink: Callable[[DataStreamWriter], DataStreamWriter],
     checkpoint: str | None = None,
-) -> None:
+) -> StreamingQuery:
     """Run a streaming DataFrame to completion under an availableNow
-    trigger. ``sink`` maps ``sdf.writeStream`` to a configured writer
-    (format / output mode / ``foreachBatch`` / path). Without a
+    trigger and return the finished query (read ``recentProgress`` for
+    its micro-batches). ``sink`` maps ``sdf.writeStream`` to a configured
+    writer (format / output mode / ``foreachBatch`` / path). Without a
     ``checkpoint`` the runner makes a temporary one and removes it
     afterwards; a checkpoint the caller passes is kept, so running again
     with it restarts the query where it stopped."""
@@ -71,6 +76,7 @@ def run_available_now(
         finally:
             spark.conf.set(_SHUFFLE_PARTITIONS, prev)
         query.awaitTermination()
+        return query
     finally:
         if checkpoint is None:
             shutil.rmtree(ckpt, ignore_errors=True)

@@ -116,6 +116,7 @@ def test_keyed_topk_state_bounded_and_improving(spark, tmp_path):
     """The streaming top-k's state never exceeds cap pairs per key, and
     a later batch with smaller hashes IMPROVES the ranking (the settled
     (key, rank) upserts converge to the global top-cap)."""
+    from gmall_flink_2022_spark.sources.io import file_batches
     from gmall_flink_2022_spark.streaming.topk_state import keyed_topk_stateful
     from gmall_flink_2022_spark.streaming.runner import run_stream_to_table
 
@@ -127,17 +128,7 @@ def test_keyed_topk_state_bounded_and_improving(spark, tmp_path):
     b2 = spark.createDataFrame(
         [("a", 4, 5), ("a", 5, 55)], "key string, id long, _u long"
     )
-    in_dir = str(tmp_path / "in")
-    import time
-
-    b1.coalesce(1).write.parquet(in_dir, mode="overwrite")
-    time.sleep(1.2)
-    b2.coalesce(1).write.parquet(in_dir, mode="append")
-    sdf = (
-        spark.readStream.schema(b1.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
+    sdf = file_batches([b1, b2], str(tmp_path / "in"))
     out = keyed_topk_stateful(sdf, "key", "id", "_u", cap=3)
     settled = run_stream_to_table(
         out, "topk_t", output_mode="update", checkpoint=str(tmp_path / "c")

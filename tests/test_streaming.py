@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import Window, functions as F
 
 from gmall_flink_2022_spark.operators.dwm import bounce_detect_batch
+from gmall_flink_2022_spark.sources.io import file_batches
 from gmall_flink_2022_spark.streaming.bounce_state import bounce_detect_stateful
 from gmall_flink_2022_spark.streaming.runner import (
     DEFAULT_STATE_PARTITIONS,
@@ -50,16 +51,11 @@ def test_bounce_batch_semantics(spark):
 
 
 def test_bounce_stateful_matches_batch(spark, tmp_path):
-    # write fixture + sentinel as two files so the watermark advances past
-    # the trailing pending entries (the CEP timeout branch)
-    in_dir = str(tmp_path / "in")
-    _events_df(spark, FIXTURE).coalesce(1).write.parquet(in_dir)
-    _events_df(spark, SENTINEL).coalesce(1).write.mode("append").parquet(in_dir)
-
+    # fixture, then sentinel, as two micro-batches: the watermark advances
+    # past the trailing pending entries (the CEP timeout branch)
+    data = _events_df(spark, FIXTURE)
     sdf = (
-        spark.readStream.schema(_events_df(spark, FIXTURE).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
+        file_batches([data, _events_df(spark, SENTINEL)], str(tmp_path / "in"))
         .withColumn("is_entry", F.col("event_type") == "view")
         .select("user_id", "event_id", "ts", "is_entry")
     )
@@ -68,6 +64,53 @@ def test_bounce_stateful_matches_batch(spark, tmp_path):
     got_ids = sorted(r["event_id"] for r in got.collect())
     # sentinel user 99's click is not an entry -> never emitted
     assert got_ids == [1, 2, 6]
+    want = bounce_detect_batch(
+        data, "user_id", "ts", F.col("event_type") == "view", GAP, tiebreak="event_id"
+    )
+    cols = ["user_id", "event_id", "ts"]
+    assert sorted(map(tuple, got.select(cols).collect())) == sorted(
+        map(tuple, want.select(cols).collect())
+    )
+
+
+def test_file_batches_replay_in_landing_order(spark, tmp_path):
+    """file_batches replays one micro-batch per frame in landing order,
+    also across two calls on one directory, without sleeping. The order
+    is load-bearing and no metric shows it: with the sentinel landed
+    first, the bounce CEP loses its timeout-branch row (event 6 stays
+    pending in state) while every batch reports
+    numRowsDroppedByWatermark 0."""
+    in_dir = str(tmp_path / "in")
+    frames = [spark.createDataFrame([(i,)], "i long") for i in (3, 0, 4, 1)]
+    file_batches(frames[:3], in_dir)
+    sdf = file_batches(frames[3:], in_dir)
+    seen: list[tuple[int, list[int]]] = []
+    run_available_now(
+        sdf,
+        lambda w: w.foreachBatch(
+            lambda b, bid: seen.append((bid, [r["i"] for r in b.collect()]))
+        ),
+    )
+    assert seen == [(0, [3]), (1, [0]), (2, [4]), (3, [1])]
+
+    sdf = (
+        file_batches(
+            [_events_df(spark, SENTINEL), _events_df(spark, FIXTURE)],
+            str(tmp_path / "reversed"),
+        )
+        .withColumn("is_entry", F.col("event_type") == "view")
+        .select("user_id", "event_id", "ts", "is_entry")
+    )
+    out = bounce_detect_stateful(sdf, gap_seconds=GAP, watermark_delay="1 seconds")
+    query = run_available_now(
+        out, lambda w: w.format("memory").queryName("bounce_rev").outputMode("append")
+    )
+    assert sorted(r["event_id"] for r in spark.table("bounce_rev").collect()) == [1, 2]
+    spark.catalog.dropTempView("bounce_rev")
+    assert [
+        [(op.numRowsDroppedByWatermark, op.numRowsTotal) for op in p.stateOperators]
+        for p in query.recentProgress
+    ] == [[(0, 0)], [(0, 1)]]
 
 
 def test_uv_stateful_day_rollover(spark, tmp_path):
@@ -149,7 +192,7 @@ def test_watermark_drops_late_data(spark, tmp_path):
     """Late-data handling (SURVEY §2.6 W7): rows arriving after the
     watermark has passed their window's end are silently dropped — the
     reference has no allowedLateness anywhere, and Spark's default is the
-    same drop. Three files + maxFilesPerTrigger=1 force three
+    same drop. Three frames landed by file_batches replay as three
     micro-batches (the file-replay watermark is applied one commit after
     it advances): batch 0 sees 11:00 data, batch 1 commits that watermark,
     so batch 2's 09:00 straggler is filtered while its in-time 11:00 row
@@ -170,32 +213,27 @@ def test_watermark_drops_late_data(spark, tmp_path):
             (5, 1, "2024-01-01 13:30:00", "click"),  # advances final watermark
         ],
     )
-    import time
-
-    in_dir = str(tmp_path / "in")
-    f1.coalesce(1).write.parquet(in_dir, mode="overwrite")
-    time.sleep(1.2)  # unambiguous file mtime order = replay order
-    f2.coalesce(1).write.parquet(in_dir, mode="append")
-    time.sleep(1.2)
-    f3.coalesce(1).write.parquet(in_dir, mode="append")
-    src = (
-        spark.readStream.schema(f1.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
+    src = file_batches([f1, f2, f3], str(tmp_path / "in"))
     agg = (
         src.withWatermark("ts", "10 seconds")
         .groupBy(F.window("ts", "1 hour").alias("w"))
         .agg(F.count(F.lit(1)).alias("ct"))
         .select(F.date_format("w.start", "HH:mm").alias("h"), "ct")
     )
-    got = {
-        r["h"]: r["ct"]
-        for r in run_stream_to_table(agg, "late_drop_test", "append").collect()
-    }
+    query = run_available_now(
+        agg, lambda w: w.format("memory").queryName("late_drop_test")
+    )
+    got = {r["h"]: r["ct"] for r in spark.table("late_drop_test").collect()}
+    spark.catalog.dropTempView("late_drop_test")
     # 09:00 closed with only the on-time row (straggler dropped); 11:00
     # kept all three in-time rows; the 13:00 window never finalized
     assert got == {"09:00": 1, "11:00": 3}
+    # (input rows, rows dropped by the watermark) per micro-batch: the
+    # only drop is the 09:00:02 straggler, in the batch that reads f3
+    assert [
+        (p.numInputRows, sum(op.numRowsDroppedByWatermark for op in p.stateOperators))
+        for p in query.recentProgress
+    ] == [(2, 0), (1, 0), (3, 1), (0, 0)]
 
 
 def test_uv_scale_plan_gate_no_collect_set(spark, sf_dir):
@@ -408,8 +446,6 @@ def test_decay_score_stateful_multi_batch_late_arrival(spark, tmp_path):
     arrival: an event in batch 3 that is OLDER than batch 1's events
     must slot into its time position (state orders by event time, not
     arrival), so the settled score equals the batch rendering."""
-    import time
-
     from pyspark.sql import functions as F
 
     from gmall_flink_2022_spark.streaming.decay_state import (
@@ -430,18 +466,7 @@ def test_decay_score_stateful_multi_batch_late_arrival(spark, tmp_path):
     f2 = ev_df([(3, 7, "2024-01-01 12:00:00", 4.0)])
     f3 = ev_df([(4, 7, "2024-01-01 09:00:00", 8.0)])  # late AND oldest
 
-    in_dir = str(tmp_path / "in")
-    f1.coalesce(1).write.parquet(in_dir, mode="overwrite")
-    time.sleep(1.2)
-    f2.coalesce(1).write.parquet(in_dir, mode="append")
-    time.sleep(1.2)
-    f3.coalesce(1).write.parquet(in_dir, mode="append")
-
-    src = (
-        spark.readStream.schema(f1.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
+    src = file_batches([f1, f2, f3], str(tmp_path / "in"))
     scored = decay_score_stateful(
         src.select(
             "user_id", "ts", "event_id",
@@ -547,22 +572,11 @@ def test_stream_funnel_out_of_order_replay(spark, tmp_path):
     sentinel = spark.createDataFrame(
         [(-1, dt.datetime(2030, 1, 1), "click")], schema
     )
-    import time
-
     in_dir = str(tmp_path / "in")
-    # unambiguous mtimes pin replay order (file source replays by mtime;
-    # a sentinel processed FIRST would advance the watermark past the
-    # whole day and drop every real event as late)
-    batch1.coalesce(1).write.parquet(in_dir, mode="overwrite")
-    time.sleep(1.2)
-    batch2.coalesce(1).write.parquet(in_dir, mode="append")
-    time.sleep(1.2)
-    sentinel.coalesce(1).write.parquet(in_dir, mode="append")
-    sdf = (
-        spark.readStream.schema(batch1.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
+    # landing order is replay order (a sentinel processed FIRST would
+    # advance the watermark past the whole day and drop every real
+    # event as late)
+    sdf = file_batches([batch1, batch2, sentinel], in_dir)
     # wide watermark so the deliberately-late batch-2 views are not
     # dropped as beyond-watermark (the engine's standard late contract)
     out = funnel_stateful(sdf, watermark_delay="4 hours")
@@ -577,7 +591,7 @@ def test_stream_funnel_out_of_order_replay(spark, tmp_path):
     assert rows == {1: (True, True), 2: (True, True)}
     # file order is load-bearing for the scenario: batch 1 really ran
     # without any view (a same-batch view would make this vacuous) —
-    # guaranteed by maxFilesPerTrigger=1 + the three separate files
+    # guaranteed by file_batches: one file, one micro-batch per frame
     assert len({f for f in os.listdir(in_dir) if f.endswith(".parquet")}) == 3
 
 
@@ -601,17 +615,8 @@ def test_stream_funnel_no_view_day_and_boundary(spark, tmp_path):
     sentinel = spark.createDataFrame(
         [(-1, dt.datetime(2030, 1, 1), "click")], schema
     )
-    import time
-
-    in_dir = str(tmp_path / "in")
-    data.coalesce(1).write.parquet(in_dir, mode="overwrite")
-    time.sleep(1.2)  # pin replay order: sentinel-first would drop the day
-    sentinel.coalesce(1).write.parquet(in_dir, mode="append")
-    sdf = (
-        spark.readStream.schema(data.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
+    # sentinel-first would drop the day
+    sdf = file_batches([data, sentinel], str(tmp_path / "in"))
     out = funnel_stateful(sdf, watermark_delay="1 seconds")
     settled = run_stream_to_table(out, "funnel_edge", output_mode="append")
     rows = {
@@ -645,23 +650,12 @@ def test_stream_funnel_type_filter_and_noise_immunity(spark, tmp_path):
         (3, day + dt.timedelta(hours=7), "error"),  # noise-only user-day
     ]
     sentinel = [(-1, dt.datetime(2030, 1, 1), "click")]
-    import time
 
     results = {}
     for label, rows in (("clean", clean), ("noisy", clean + noise)):
-        in_dir = str(tmp_path / f"in_{label}")
-        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
-            in_dir, mode="overwrite"
-        )
-        time.sleep(1.2)
-        spark.createDataFrame(sentinel, schema).coalesce(1).write.parquet(
-            in_dir, mode="append"
-        )
-        sdf = (
-            spark.readStream.schema("user_id long, ts timestamp, "
-                                    "event_type string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
+        sdf = file_batches(
+            [spark.createDataFrame(r, schema) for r in (rows, sentinel)],
+            str(tmp_path / f"in_{label}"),
         )
         out = funnel_stateful(sdf, watermark_delay="1 seconds")
         if label == "noisy":
@@ -700,7 +694,6 @@ def test_stream_funnel_checkpoint_resume(spark, tmp_path):
     resumed state must still recover the anchor shift (W8: restart =
     replay from checkpoint, state is the source of truth)."""
     import datetime as dt
-    import time
 
     from gmall_flink_2022_spark.streaming.funnel_state import funnel_stateful
 
@@ -715,16 +708,9 @@ def test_stream_funnel_checkpoint_resume(spark, tmp_path):
 
     out_dir = str(tmp_path / "out")
 
-    def run(name):
+    def run(sdf):
         # file sink, not memory: the memory sink does not support
         # checkpoint RECOVERY, which is the point of this test
-        sdf = (
-            spark.readStream.schema(
-                "user_id long, ts timestamp, event_type string"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
-        )
         out = funnel_stateful(sdf, watermark_delay="4 hours")
         run_available_now(
             out,
@@ -745,21 +731,17 @@ def test_stream_funnel_checkpoint_resume(spark, tmp_path):
         ],
         schema,
     )
-    batch1.coalesce(1).write.parquet(in_dir, mode="overwrite")
-    first = run("funnel_resume1")
+    first = run(file_batches([batch1], in_dir))
     assert first.count() == 0  # nothing timed out yet: all state, no output
 
-    time.sleep(1.2)
     batch2 = spark.createDataFrame(
         [(1, t(9, 0), "view"), (2, t(9, 0), "view")], schema
     )
-    batch2.coalesce(1).write.parquet(in_dir, mode="append")
-    time.sleep(1.2)
-    spark.createDataFrame(
+    sentinel = spark.createDataFrame(
         [(-1, dt.datetime(2030, 1, 1), "click")], schema
-    ).coalesce(1).write.parquet(in_dir, mode="append")
-
-    second = run("funnel_resume2")
+    )
+    # the second landing replays after batch 1's file
+    second = run(file_batches([batch2, sentinel], in_dir))
     rows = {
         r["user_id"]: (r["reached_click"], r["reached_purchase"])
         for r in second.filter(F.col("user_id") >= 0).collect()
@@ -782,7 +764,6 @@ def test_stream_funnel_hot_user_data_branch_emission(spark, tmp_path):
     The day-1 row must appear IN batch 2 (batch_id 1), not in a
     trailing timeout batch and not never."""
     import datetime as dt
-    import time
 
     from gmall_flink_2022_spark.streaming.funnel_state import funnel_stateful
 
@@ -803,14 +784,7 @@ def test_stream_funnel_hot_user_data_branch_emission(spark, tmp_path):
     batch2 = spark.createDataFrame(
         [(1, dt.datetime(2024, 5, 2, 13, 0), "view")], schema
     )
-    batch1.coalesce(1).write.parquet(in_dir, mode="overwrite")
-    time.sleep(1.2)
-    batch2.coalesce(1).write.parquet(in_dir, mode="append")
-    sdf = (
-        spark.readStream.schema(batch1.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
+    sdf = file_batches([batch1, batch2], in_dir)
     out = funnel_stateful(sdf, watermark_delay="1 seconds")
     emitted: list[tuple[int, tuple]] = []
 
@@ -850,7 +824,6 @@ def test_stream_bounce_hot_key_data_branch_emission(spark, tmp_path):
     with same-batch data. A final sentinel batch (watermark to 2030)
     then proves the resolved state is gone: nothing re-emits."""
     import datetime as dt
-    import time
 
     from gmall_flink_2022_spark.streaming.bounce_state import (
         bounce_detect_stateful,
@@ -875,16 +848,7 @@ def test_stream_bounce_hot_key_data_branch_emission(spark, tmp_path):
     sentinel = spark.createDataFrame(
         [(99, 91, dt.datetime(2030, 1, 1), False)], schema
     )
-    batch1.coalesce(1).write.parquet(in_dir, mode="overwrite")
-    time.sleep(1.2)
-    batch2.coalesce(1).write.parquet(in_dir, mode="append")
-    time.sleep(1.2)
-    sentinel.coalesce(1).write.parquet(in_dir, mode="append")
-    sdf = (
-        spark.readStream.schema(batch1.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
+    sdf = file_batches([batch1, batch2, sentinel], in_dir)
     out = bounce_detect_stateful(sdf, gap_seconds=10, watermark_delay="1 seconds")
     emitted: list[tuple[int, tuple]] = []
 
@@ -940,14 +904,9 @@ def test_stream_stage1_psl_norm_checkpoint_resume(spark, sf_dir, tmp_path):
     store = DimStore(spark, str(tmp_path / "store"))
     table = "s1psln_resume"
 
-    def run() -> list[int]:
+    def run(sdf) -> list[int]:
         """One availableNow pass of the live chain's streaming half,
         recording which batch ids the upsert store APPLIED."""
-        sdf = (
-            spark.readStream.schema(base.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
-        )
         norm = text_mod.normalize_text(sdf, "vtext", out_col="ntext").drop(
             "vtext"
         )
@@ -973,18 +932,13 @@ def test_stream_stage1_psl_norm_checkpoint_resume(spark, sf_dir, tmp_path):
         )
         return applied
 
-    base.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.parquet(
-        in_dir, mode="overwrite"
-    )
-    assert run() == [0]  # run 1: batch 1 only, then the query STOPS
+    # run 1: batch 1 only, then the query STOPS
+    assert run(file_batches([base.filter(F.col("doc_id") % 2 == 0)], in_dir)) == [0]
 
-    base.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.parquet(
-        in_dir, mode="append"
-    )
     # restart from the checkpoint: ONLY the new file may be applied —
     # [0, 1] here means the restart re-applied committed batch 1 into
     # the store (the double-apply this test exists to catch)
-    assert run() == [1]
+    assert run(file_batches([base.filter(F.col("doc_id") % 2 == 1)], in_dir)) == [1]
 
     # post-settle scoring, verbatim from the live entry
     settled = store.read(table).select("w.doc_id", "w.nrm", "w.domain")
