@@ -26,6 +26,12 @@ def tokenize_col(col: Column | str, lowercase: bool = True) -> Column:
     return F.filter(F.split(c, _WORD_RE), lambda t: t != "")
 
 
+def tokenize_sql(col: str) -> str:
+    """:func:`tokenize_col` as Spark SQL text over the expression ``col``
+    (a raw string literal keeps the regex unescaped)."""
+    return f"filter(split(lower({col}), r'{_WORD_RE}'), t -> t != '')"
+
+
 def split_words(df: DataFrame, text_col: str, out_col: str = "word") -> DataFrame:
     """The LATERAL TABLE(split_words(text)) equivalent: one row per token.
     Implements the *intended* semantics — the reference's :19 collects the

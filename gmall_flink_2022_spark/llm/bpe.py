@@ -29,6 +29,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window as W, functions as F
 
+from ..sources.io import local_frame
+
 from .text import BPE_RE
 
 BPE_DEFAULT_MERGES = 8
@@ -142,8 +144,8 @@ def bpe_train(
     spark = df.sparkSession
     syms = _initial_symbols(word_freqs(df, text_col)).localCheckpoint(eager=True)
     merges, _ = _run_merges(syms, n_merges)
-    return spark.createDataFrame(
-        merges, "step long, left_sym string, right_sym string, pair_count long"
+    return local_frame(
+        spark, merges, "step long, left_sym string, right_sym string, pair_count long"
     )
 
 
@@ -209,10 +211,11 @@ def bpe_apply(
     broadcast-config discipline; the corpus-sized work is the one
     word_freqs pass plus ``n_merges`` window passes over the word
     table, all sharing the wid partitioning."""
-    rows = (
-        merges.select("step", "left_sym", "right_sym")
-        .orderBy("step")
-        .collect()  # bounded: the shipped artifact is n_merges rows
+    # bounded: the shipped artifact is n_merges rows. Sorted here, not
+    # with orderBy: a Spark sort runs jobs even over a local relation
+    rows = sorted(
+        merges.select("step", "left_sym", "right_sym").collect(),
+        key=lambda r: r["step"],
     )
     syms = _initial_symbols(word_freqs(df, text_col)).localCheckpoint(eager=True)
     for r in rows:

@@ -28,23 +28,35 @@ duplicates are a preceding exact_dedup/minhash pass (already in the
 family); after ingest the index contains the batch's new docs, so the
 NEXT batch dedupes against them (proven in tests by chaining batches).
 
-Scale shape: exact path = one join on digest; near path = arrival-side
-shingle/signature work sized by the BATCH, one band-bucket join against
-the signature index (linear candidates, same LSH bound as the batch
-operator), agreement verify on candidates only. Index updates ride
-DimStore's partition-pruned bucket merge — O(touched buckets), not
-O(index).
+Scale shape: one decision plan per batch, in which each index table is
+scanned once and streams through a broadcast probe of the arrival side,
+so the index is never shuffled or broadcast. The exact path streams the
+digest index against the arrival digests. The near path computes each
+arrival's signature row-locally (sized by the BATCH), explodes every
+index row to its band buckets and streams it against one broadcast of
+the arrivals' (bucket, signature) rows, verifying agreement inside that
+probe (linear candidates, same LSH bound as the batch operator); only
+the verified collisions reach the per-arrival best-match aggregation.
+Ingest checkpoints that plan once, and the index update rides
+DimStore's bucketed upsert — brand-new keys are added as files to their
+buckets, so nothing already indexed is rewritten; O(batch) writes plus
+a pk probe of the touched buckets, not O(index).
 """
 
 from __future__ import annotations
 
+import uuid
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, functions as F
 
+from ..functions.tokenize import tokenize_sql
 from ..sources.dim_store import DimStore
 from .dedup import minhash_signatures
 
 DIGEST_TABLE = "dedup_digest_idx"
 SIG_TABLE = "dedup_sig_idx"
+DECISION_COLS = ("doc_id", "dup_kind", "match_id", "agree_n")
 
 
 def _text_or_empty(text_col: str):
@@ -65,21 +77,6 @@ def _digest_rows(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
         .groupBy("digest")
         .agg(F.min("doc_id").alias("keep_id"))
     )
-
-
-def _band_buckets(
-    sig: DataFrame, id_name: str, num_hashes: int, bands: int
-) -> DataFrame:
-    rows = num_hashes // bands
-    band_cols = [
-        F.concat_ws(
-            "_", F.lit(str(b)), *[F.col(f"mh{b * rows + r}") for r in range(rows)]
-        ).alias("bucket")
-        for b in range(bands)
-    ]
-    return sig.select(
-        F.col(id_name), F.explode(F.array(*band_cols)).alias("bucket")
-    ).distinct()
 
 
 def build_dedup_index(
@@ -113,10 +110,31 @@ def incremental_dedup(
     hits, matching-signature-component count for near hits, NULL for new
     docs. The corpus side reads ONLY the two index tables — no corpus
     text scan appears in this plan (asserted in tests)."""
-    decisions, _ = _decide(
+    return _decide(
         store, arrivals, id_col, text_col, n, num_hashes, bands, min_agree
-    )
-    return decisions
+    ).select(*DECISION_COLS)
+
+
+@contextmanager
+def _global_views(**frames: DataFrame):
+    """Register each frame as a global temporary view under a fresh name
+    and yield {key: qualified view name}; the views are dropped on exit.
+    Global, not session, views: inside ``foreachBatch`` the arrival
+    frame lives in the stream's cloned session and the index frames in
+    the store's, and a session view is visible only in the session of
+    the frame that registered it (``spark.sql(text, **frames)`` fails
+    to resolve a view there). The SQL's analyzed plan keeps the frames'
+    plans, so dropping the views does not touch the returned frame."""
+    spark = next(iter(frames.values())).sparkSession
+    db = spark.conf.get("spark.sql.globalTempDatabase")
+    names = {k: f"_inc_{k}_{uuid.uuid4().hex}" for k in frames}
+    try:
+        for k, df in frames.items():
+            df.createOrReplaceGlobalTempView(names[k])
+        yield {k: f"{db}.{n}" for k, n in names.items()}
+    finally:
+        for n in names.values():
+            spark.catalog.dropGlobalTempView(n)
 
 
 def _decide(
@@ -128,91 +146,91 @@ def _decide(
     num_hashes: int,
     bands: int,
     min_agree: int,
-) -> tuple[DataFrame, DataFrame]:
-    """(decisions, arrival signatures) — the signatures are exposed so
-    ingest can index new docs without re-tokenizing them."""
-    idx_dig = store.read(DIGEST_TABLE)
-    idx_sig = store.read(SIG_TABLE)
-    arr = arrivals.select(
-        F.col(id_col).alias("doc_id"), _text_or_empty(text_col).alias("text")
-    ).withColumn("digest", F.md5("text"))
-    # exact membership as two arrival-side broadcasts: the corpus-sized
-    # digest index STREAMS against the broadcast arrival digests (inner
-    # probe, hits are arrival-bounded), then the hits broadcast back
-    # onto the arrivals — a naive `arr LEFT JOIN idx` would make the
-    # index the build side (or shuffle it); this never moves the index
-    hits = idx_dig.join(
-        F.broadcast(arr.select("doc_id", "digest")), "digest"
-    ).select("doc_id", "keep_id")
-    with_exact = arr.join(F.broadcast(hits), "doc_id", "left").select(
-        "doc_id", "text", F.col("keep_id").alias("exact_match")
+) -> DataFrame:
+    """One decision frame: :data:`DECISION_COLS`, then the arrival
+    ``text`` and its signature ``mh0..mh{k-1}`` (NULL for exact hits and
+    for docs shorter than ``n`` tokens) — everything the index update
+    needs, so one checkpoint of this frame serves the returned decisions
+    and both upserts.
+
+    The plan is one SQL statement: one parse and one analysis in a
+    handful of driver round trips (built frame by frame, the same plan
+    would be analyzed once per intermediate frame). Every join broadcasts its
+    arrival-bounded side, and each index table is scanned once and
+    streamed, never shuffled: the digest index through the exact probe,
+    the signature index through the bucket probe, whose output (band
+    collisions, verified inside the probe) is the first thing any
+    exchange sees."""
+    hs = range(num_hashes)
+    rows = num_hashes // bands
+
+    def band_array(p: str) -> str:
+        return "array({})".format(", ".join(
+            f"concat_ws('_', '{b}', "
+            + ", ".join(f"{p}{b * rows + r}" for r in range(rows)) + ")"
+            for b in range(bands)
+        ))
+
+    mh = ", ".join(
+        f"array_min(transform(grams, g -> substring(md5(concat('{i}|', g)), 1, 8)))"
+        f" AS mh{i}"
+        for i in hs
     )
-    non_exact = with_exact.filter(F.col("exact_match").isNull()).select(
-        "doc_id", "text"
-    )
-    arr_sig = minhash_signatures(non_exact, "doc_id", "text", n, num_hashes)
-    a_bk = _band_buckets(
-        arr_sig.withColumnRenamed("id", "a_id"), "a_id", num_hashes, bands
-    )
-    c_bk = _band_buckets(
-        idx_sig.withColumnRenamed("doc_id", "c_id"), "c_id", num_hashes, bands
-    )
-    # the arrival side is BATCH-sized while the index is CORPUS-sized:
-    # broadcast the arrival buckets/signatures so the index side never
-    # shuffles (at 100 TB the signature index streams through the
-    # bucket probe; only collisions surface)
-    cands = (
-        F.broadcast(a_bk).join(c_bk, "bucket").select("a_id", "c_id").distinct()
-    )
-    s_a = arr_sig.select(
-        F.col("id").alias("a_id"),
-        *[F.col(f"mh{i}").alias(f"a{i}") for i in range(num_hashes)],
-    )
-    s_c = idx_sig.select(
-        F.col("doc_id").alias("c_id"),
-        *[F.col(f"mh{i}").alias(f"c{i}") for i in range(num_hashes)],
-    )
-    agree = sum(
-        F.when(F.col(f"a{i}") == F.col(f"c{i}"), 1).otherwise(0)
-        for i in range(num_hashes)
-    )
-    # a self-arrived doc can never match itself: the index has no row
-    # for it yet (that is the whole point of the incremental contract)
-    # candidate pairs carry the arrival signature (both batch-sized) and
-    # broadcast INTO the index-side signature scan: the corpus-sized
-    # index is never shuffled anywhere in this plan — it streams through
-    # two broadcast probes (buckets above, verification here)
-    ver = (
-        s_c.join(F.broadcast(cands.join(F.broadcast(s_a), "a_id")), "c_id")
-        .select("a_id", "c_id", agree.alias("agree"))
-        .filter(F.col("agree") >= min_agree)
-    )
-    # best match: max agreement, ties to smallest corpus id — encoded as
-    # min(struct(misses, c_id)) so one aggregation decides both
-    best = ver.groupBy("a_id").agg(
-        F.min(
-            F.struct(
-                (F.lit(num_hashes) - F.col("agree")).alias("miss"),
-                F.col("c_id").alias("cid"),
-            )
-        ).alias("b")
-    )
-    decisions = (
-        with_exact.join(F.broadcast(best), with_exact["doc_id"] == best["a_id"], "left")
-        .select(
-            "doc_id",
-            F.when(F.col("exact_match").isNotNull(), F.lit("exact"))
-            .when(F.col("b").isNotNull(), F.lit("near"))
-            .otherwise(F.lit("new"))
-            .alias("dup_kind"),
-            F.coalesce(F.col("exact_match"), F.col("b.cid")).alias("match_id"),
-            F.when(F.col("exact_match").isNotNull(), F.lit(num_hashes))
-            .otherwise(F.lit(num_hashes) - F.col("b.miss"))
-            .cast("long")
-            .alias("agree_n"),
-        )
-    )
-    return decisions, arr_sig
+    agree = " + ".join(f"IF(ab.a{i} = cb.c{i}, 1, 0)" for i in hs)
+    spark = arrivals.sparkSession
+    with _global_views(
+        arr=arrivals, dig=store.read(DIGEST_TABLE), sig=store.read(SIG_TABLE)
+    ) as v:
+        return spark.sql(f"""
+        WITH a AS (
+          SELECT doc_id, text, md5(text) AS digest FROM (
+            SELECT `{id_col}` AS doc_id, coalesce(`{text_col}`, '') AS text
+            FROM {v['arr']})),
+        -- exact membership: the digest index streams against the broadcast
+        -- arrival digests, then the (arrival-bounded) hits broadcast back
+        hits AS (
+          SELECT /*+ BROADCAST(a) */ a.doc_id, d.keep_id
+          FROM {v['dig']} d JOIN a ON d.digest = a.digest),
+        x AS (
+          SELECT /*+ BROADCAST(h) */ a.doc_id, a.text, h.keep_id AS exact_match,
+                 {tokenize_sql('a.text')} AS toks
+          FROM a LEFT JOIN hits h ON a.doc_id = h.doc_id),
+        -- row-local MinHash: the min over a doc's n-grams needs no
+        -- explode/group-by (duplicate grams cannot change a min)
+        s AS (
+          SELECT doc_id, text, exact_match, {mh} FROM (
+            SELECT doc_id, text, exact_match,
+                   IF(exact_match IS NULL AND size(toks) >= {n},
+                      transform(sequence(1, size(toks) - {n} + 1),
+                                i -> concat_ws(' ', slice(toks, i, {n}))),
+                      array()) AS grams
+            FROM x)),
+        ab AS (
+          SELECT doc_id AS a_id, explode({band_array('mh')}) AS bucket,
+                 {", ".join(f"mh{i} AS a{i}" for i in hs)}
+          FROM s WHERE mh0 IS NOT NULL),
+        cb AS (
+          SELECT doc_id AS c_id, explode({band_array('mh')}) AS bucket,
+                 {", ".join(f"mh{i} AS c{i}" for i in hs)}
+          FROM {v['sig']}),
+        -- best match: max agreement, ties to the smallest index id, as
+        -- min(struct(misses, c_id)); a pair colliding in several bands
+        -- repeats, which cannot change a min
+        best AS (
+          SELECT a_id, min(named_struct('miss', {num_hashes} - agree, 'cid', c_id)) AS b
+          FROM (SELECT /*+ BROADCAST(ab) */ ab.a_id, cb.c_id, {agree} AS agree
+                FROM cb JOIN ab ON cb.bucket = ab.bucket)
+          WHERE agree >= {min_agree}
+          GROUP BY a_id)
+        SELECT /*+ BROADCAST(best) */ s.doc_id,
+               CASE WHEN s.exact_match IS NOT NULL THEN 'exact'
+                    WHEN best.b IS NOT NULL THEN 'near'
+                    ELSE 'new' END AS dup_kind,
+               coalesce(s.exact_match, best.b.cid) AS match_id,
+               CAST(IF(s.exact_match IS NOT NULL, {num_hashes}, {num_hashes} - best.b.miss)
+                    AS BIGINT) AS agree_n,
+               s.text, {", ".join(f"s.mh{i}" for i in hs)}
+        FROM s LEFT JOIN best ON s.doc_id = best.a_id""")
 
 
 def ingest_with_dedup(
@@ -228,29 +246,30 @@ def ingest_with_dedup(
     """Decide + UPDATE: runs :func:`incremental_dedup`, then adds the
     batch's ``new`` docs (digest + signature) to the index so the next
     batch dedupes against them. The ARRIVAL batch is materialized once
-    at entry (foreachBatch discipline: the decision pass, the signature
-    reuse and the index upserts all consume the checkpoint, so a
-    streaming micro-batch's upstream plan executes exactly once); the
-    decision/signature frames are materialized BEFORE the index update —
-    a lazy decision plan re-read after the upsert would see the
-    arrivals' own rows and misclassify them as exact self-matches."""
+    at entry (foreachBatch discipline: a streaming micro-batch's
+    upstream plan executes exactly once). Then one phase boundary: the
+    decision frame, which also carries each arrival's text and
+    signature, is checkpointed BEFORE the index update, and the returned
+    decisions and both upserts read that checkpoint — a lazy decision
+    plan re-read after the upsert would see the arrivals' own rows and
+    misclassify them as exact self-matches."""
     arr = arrivals.select(
         F.col(id_col).alias("doc_id"), _text_or_empty(text_col).alias("text")
     ).localCheckpoint(eager=True)
-    decisions, arr_sig = _decide(
+    dec = _decide(
         store, arr, "doc_id", "text", n, num_hashes, bands, min_agree
+    ).localCheckpoint(eager=True)
+    new = dec.filter(F.col("dup_kind") == "new")
+    store.upsert(DIGEST_TABLE, _digest_rows(new, "doc_id", "text"), pk="digest")
+    # docs shorter than n tokens have no signature (as in the bootstrap)
+    store.upsert(
+        SIG_TABLE,
+        new.filter(F.col("mh0").isNotNull()).select(
+            "doc_id", *[f"mh{i}" for i in range(num_hashes)]
+        ),
+        pk="doc_id",
     )
-    # materialize BOTH before touching the index: the signature frame is
-    # reused below (saves re-tokenizing the new docs), and both plans
-    # read the PRE-update index state
-    decisions = decisions.localCheckpoint(eager=True)
-    arr_sig = arr_sig.localCheckpoint(eager=True)
-    new_ids = decisions.filter(F.col("dup_kind") == "new").select("doc_id")
-    new_docs = arr.join(new_ids, "doc_id")
-    store.upsert(DIGEST_TABLE, _digest_rows(new_docs, "doc_id", "text"), pk="digest")
-    new_sigs = arr_sig.withColumnRenamed("id", "doc_id").join(new_ids, "doc_id")
-    store.upsert(SIG_TABLE, new_sigs, pk="doc_id")
-    return decisions
+    return dec.select(*DECISION_COLS)
 
 
 CLUSTER_TABLE = "dup_cluster_map"

@@ -20,7 +20,7 @@ from ..operators.dwm import (
     interval_join,
     sessionize_batch,
 )
-from ..sources.io import read_table
+from ..sources.io import local_frame, read_table
 from .registry import register
 
 DEC = "decimal(18,2)"
@@ -136,7 +136,8 @@ _ROUTES = [
 def dwd_db_route(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events").withColumnRenamed("event_type", "tableName")
     ev = ev.withColumn("type", F.lit("insert"))
-    cfg = spark.createDataFrame(
+    cfg = local_frame(
+        spark,
         [(s, "insert", t, tbl) for s, t, tbl in _ROUTES],
         "source_table string, operate_type string, sink_type string, sink_table string",
     )

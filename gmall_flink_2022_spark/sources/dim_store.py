@@ -8,22 +8,30 @@ cache on update (DimSinkFunction.java:36-38).
 
 Spark-native rendering: each dim table is a parquet (Delta/Iceberg on a
 real lakehouse) directory hash-bucketed on the configured pk
-(`__bucket=N/` partition dirs); a micro-batch of CDC rows is STAGED to
+(`__bucket=N/` partition dirs) with its schema in `_schema.json` beside
+them, so reading a table runs no schema-inference job. A micro-batch of
+CDC rows is deduped and colocated by bucket in ONE shuffle and STAGED to
 parquet with a single action (one materialization of the streaming
-plan), then merged with a PARTITION-PRUNED read -> anti-join -> union
-written to a sibling dir whose affected bucket dirs are swapped into
-place: only the buckets containing changed keys are read or rewritten,
-and the first write of a table is just a rename of the staged dir (the
-`foreachBatch MERGE INTO` pattern; with Delta available this is a real
-MERGE with file-level pruning — the call-site API stays identical).
+plan), one file per touched bucket. Then a pk-only broadcast semi-join
+over the touched buckets decides the commit: brand-new keys are an
+INSERT — the staged files move into their bucket dirs beside the files
+already there, and no bucket is rewritten; a batch that updates a key
+is a MERGE — a PARTITION-PRUNED read -> anti-join -> union, written one
+file per bucket to a sibling dir whose bucket dirs are swapped into
+place. The first write of a table is just a rename of the staged dir
+(the `foreachBatch MERGE INTO` pattern; with Delta available this is a
+real MERGE with file-level pruning — the call-site API stays identical).
 Cache invalidation disappears by construction: downstream broadcast
 joins re-read the dim per micro-batch.
 
 Scale note: per-batch work is O(dim_size * touched_buckets / n_buckets),
-not O(dim size) — a point update to one key rewrites one bucket. Size
-n_buckets so a bucket fits comfortably in one task (reference dims —
-user/province/sku/spu/trademark/category — are small; for a 10^9-row
-user dim at 100 TB raise n_buckets accordingly).
+not O(dim size) — a point update to one key rewrites one bucket, and an
+insert reads only the touched buckets' pk column, in one probe task.
+Inserts add a file per touched bucket, so a long-lived table needs
+``auto_compact_every`` (or ``compact_if_fragmented``) to bound its file
+count. Size n_buckets so a bucket fits comfortably in one task
+(reference dims — user/province/sku/spu/trademark/category — are small;
+for a 10^9-row user dim at 100 TB raise n_buckets accordingly).
 """
 
 from __future__ import annotations
@@ -31,21 +39,26 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
+from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F, types as T
+
+#: the table's schema, written beside its bucket dirs on every commit
+SCHEMA_FILE = "_schema.json"
 
 
 class DimStore:
     """Directory-backed dim tables with bucketed upsert semantics.
 
-    Crash atomicity (r7 ADVICE): every multi-bucket swap (upsert merge,
-    compact, delete) is journaled — the fully-written replacement dir is
+    Crash atomicity (r7 ADVICE): every multi-bucket commit (upsert
+    insert or merge, compact, delete) is journaled — the fully-written
+    source dir and the buckets it swaps, removes or adds files to are
     recorded in ``<table>.__journal`` (atomic write-then-rename) BEFORE
-    the first bucket dir is swapped, and the journal is removed only
-    after the last swap. A crash mid-swap therefore leaves a journal
-    that names exactly which buckets still need replacing/removing, and
-    every store entry point replays it first — no half-applied delete
-    can resurrect rows or drop them invisibly. The store is
+    the first bucket dir changes, and the journal is removed only after
+    the last one. A crash mid-commit therefore leaves a journal that
+    names exactly which buckets still need replacing/removing/filling,
+    and every store entry point replays it first — no half-applied
+    commit can resurrect, duplicate or drop rows invisibly. The store is
     single-writer per table (the reference's Phoenix upsert sink is a
     single Flink sink task per table too); concurrent writers would
     need a lock around stage+journal+swap.
@@ -61,24 +74,23 @@ class DimStore:
         self.spark = spark
         self.root = root
         self.n_buckets = n_buckets
-        # continuous-ingest lifecycle: every merge rewrites each affected
-        # bucket dir with however many part files the merge plan's tasks
-        # emit, so file count per bucket grows with upsert count. With
-        # auto_compact_every=N, every Nth upsert OF A TABLE triggers
-        # compact(table) — file count stays bounded across unbounded
-        # ingest (the Delta/Iceberg OPTIMIZE analog).
+        # continuous-ingest lifecycle: every insert commit adds a part
+        # file to each bucket it touches, so file count per bucket grows
+        # with upsert count. With auto_compact_every=N, every Nth upsert
+        # OF A TABLE triggers compact(table) — file count stays bounded
+        # across unbounded ingest (the Delta/Iceberg OPTIMIZE analog).
         self.auto_compact_every = auto_compact_every
         self._upserts: dict[str, int] = {}
 
     def _path(self, table: str) -> str:
         return os.path.join(self.root, table)
 
-    # ------------------------------------------------ journaled swaps
+    # ------------------------------------------------ journaled commits
     def _journal_path(self, table: str) -> str:
         return self._path(table) + ".__journal"
 
     def _apply_swaps(
-        self, path: str, src_dir: str, swaps: list[int], removes: list[int]
+        self, path: str, src_dir: str, swaps: Sequence[int], removes: Sequence[int]
     ) -> None:
         """Replay a journal body: replace each ``swaps`` bucket dir with
         its fully-written counterpart under ``src_dir``; remove each
@@ -95,42 +107,77 @@ class DimStore:
         for b in removes:
             shutil.rmtree(os.path.join(path, f"__bucket={b}"), ignore_errors=True)
 
-    def _swap_buckets(
+    def _apply_adds(self, path: str, src_dir: str, adds: Sequence[int]) -> None:
+        """Replay the insert half of a journal body: move every file of
+        each ``adds`` bucket dir under ``src_dir`` into the table's
+        bucket dir, beside the files already there. Spark names a
+        written part file with its write job's UUID, so a moved name is
+        unique in its bucket. Idempotent like the swaps: a file already
+        moved is absent from ``src_dir``, so replay moves only the rest."""
+        for b in adds:
+            src = os.path.join(src_dir, f"__bucket={b}")
+            if not os.path.isdir(src):
+                continue
+            dst = os.path.join(path, f"__bucket={b}")
+            os.makedirs(dst, exist_ok=True)
+            for name in os.listdir(src):
+                os.replace(os.path.join(src, name), os.path.join(dst, name))
+
+    def _write_schema(self, table_dir: str, schema: T.StructType) -> None:
+        """Write ``<table>/_schema.json`` (atomic write-then-rename). Spark's
+        file listing skips names starting with ``_`` or ``.``, so neither
+        the file nor its temp is read as data."""
+        tmp = os.path.join(table_dir, "." + SCHEMA_FILE + ".tmp")
+        with open(tmp, "w") as f:
+            f.write(schema.json())
+            f.flush()
+            os.fsync(f.fileno())
+        os.replace(tmp, os.path.join(table_dir, SCHEMA_FILE))
+
+    def _commit(
         self,
         table: str,
         src_dir: str,
-        swaps: list[int],
-        removes: list[int] | tuple = (),
+        schema: T.StructType,
+        swaps: Sequence[int] = (),
+        removes: Sequence[int] = (),
+        adds: Sequence[int] = (),
     ) -> None:
-        """Commit a fully-staged replacement: journal first (atomic
-        write + rename), then swap, then clear the journal and the
-        staging dir. The journal existing == the swap is committed and
-        MUST complete; its absence == the table is consistent."""
+        """Commit a fully-written ``src_dir``: write the table's schema
+        file, journal (atomic write + rename), apply the swaps, removes
+        and adds, then clear the journal and ``src_dir``. The journal
+        existing == the commit is decided and MUST complete; its absence
+        == the table is consistent. The schema file goes first: a commit
+        only ever widens the schema, and old files read under a wider
+        schema give NULL for the new columns."""
         path = self._path(table)
+        self._write_schema(path, schema)
         journal = self._journal_path(table)
         tmp = journal + ".tmp"
         with open(tmp, "w") as f:
             json.dump(
                 {"src": os.path.basename(src_dir), "swaps": swaps,
-                 "removes": removes},
+                 "removes": removes, "adds": adds},
                 f,
             )
             f.flush()
             os.fsync(f.fileno())
         os.replace(tmp, journal)
         self._apply_swaps(path, src_dir, swaps, removes)
+        self._apply_adds(path, src_dir, adds)
         os.remove(journal)
         shutil.rmtree(src_dir, ignore_errors=True)
 
     def _recover(self, table: str) -> None:
-        """Replay a committed-but-interrupted swap (journal present).
+        """Replay a committed-but-interrupted commit (journal present).
         Runs at every entry point, so a crashed delete/compact/upsert
         completes on the next touch instead of surfacing half-applied
-        (resurrected or duplicated) rows. If the completed replay leaves
-        a table with no bucket dirs (a crash inside a delete-everything
-        before its empty-schema guard ran), the table dir is dropped —
-        the next upsert recreates it DDL-on-demand; the non-crash path
-        instead leaves a readable empty table, both consistent states."""
+        (resurrected, duplicated or missing) rows. If the completed
+        replay leaves a table with no bucket dirs (a crash inside a
+        delete-everything before its empty-schema guard ran), the table
+        dir is dropped — the next upsert recreates it DDL-on-demand; the
+        non-crash path instead leaves a readable empty table, both
+        consistent states."""
         journal = self._journal_path(table)
         if not os.path.isfile(journal):
             return
@@ -139,6 +186,7 @@ class DimStore:
         path = self._path(table)
         src_dir = os.path.join(os.path.dirname(path), j["src"])
         self._apply_swaps(path, src_dir, j["swaps"], j.get("removes", []))
+        self._apply_adds(path, src_dir, j.get("adds", []))
         os.remove(journal)
         shutil.rmtree(src_dir, ignore_errors=True)
         if os.path.isdir(path) and not any(
@@ -150,61 +198,81 @@ class DimStore:
         self._recover(table)
         return os.path.isdir(self._path(table))
 
-    def read(self, table: str) -> DataFrame:
+    def _scan(self, table: str) -> DataFrame:
+        """The whole table, ``__bucket`` included, read with the schema in
+        its ``_schema.json``: no schema-inference job. A table written
+        before the schema file existed falls back to inference."""
         self._recover(table)
-        return self.spark.read.parquet(self._path(table)).drop("__bucket")
+        path = self._path(table)
+        try:
+            with open(os.path.join(path, SCHEMA_FILE)) as f:
+                schema = T.StructType.fromJson(json.load(f))
+        except FileNotFoundError:
+            return self.spark.read.parquet(path)
+        return self.spark.read.schema(schema).parquet(path)
+
+    def read(self, table: str) -> DataFrame:
+        return self._scan(table).drop("__bucket")
 
     def upsert(self, table: str, batch: DataFrame, pk: str = "id") -> None:
         """Merge a batch of rows into the dim table keyed on ``pk``:
         last-writer-wins per key within the batch, batch beats store
         (the reference's Phoenix UPSERT semantics). Creates the table on
-        first write — the S8 DDL-on-demand path."""
+        first write — the S8 DDL-on-demand path.
+
+        The batch is staged to parquet with ONE action (inside
+        foreachBatch every extra action would re-execute the upstream
+        streaming plan), after one shuffle on ``__bucket`` that both
+        colocates each bucket's rows (one staged file per touched
+        bucket) and dedupes the batch: the bucket is a function of the
+        pk, so deduping on (bucket, pk) keeps the same rows as on pk.
+        Then one of three commits:
+
+        - first write: the staged dir is renamed into place;
+        - insert: a pk-only broadcast semi-join over the touched buckets
+          finds no staged key in the table, so the staged files are
+          moved into their bucket dirs beside the files there — no
+          bucket is rewritten;
+        - merge: a staged key exists (or the batch widens the schema),
+          so the touched buckets are rewritten as table rows without a
+          staged key plus the staged rows, one file per bucket, and
+          swapped into place.
+
+        Every commit writes the table's ``_schema.json``, which
+        :meth:`read` and the merge read with."""
+        # replay an interrupted commit BEFORE staging: an insert commit's
+        # journal names the stage dir, which the write below overwrites
+        self._recover(table)
+        cols = batch.columns
+        bucket = F.pmod(F.xxhash64(F.col(pk).cast("string")), F.lit(self.n_buckets))
+        # with K upstream partitions, partitionBy alone writes up to
+        # K x n_buckets tiny files (measured 32x file-count inflation at
+        # sf0.1); the shuffle on __bucket caps it at one file per bucket
+        batch = batch.withColumn("__bucket", bucket.cast("int")).repartition(
+            self.n_buckets, "__bucket"
+        )
         # dedupe the batch itself: keep the last row per pk (CDC batches can
         # carry insert+update for one key; max operation ts wins — here we
         # rely on a monotonically increasing `__seq` if present, else any)
-        cols = batch.columns
         if "__seq" in cols:
-            latest = batch.groupBy(pk).agg(
+            latest = batch.groupBy("__bucket", pk).agg(
                 F.max_by(F.struct(*[c for c in cols if c != pk]), "__seq").alias("s")
             )
-            batch = latest.select(pk, "s.*").drop("__seq")
+            batch = latest.select(pk, "s.*", "__bucket").drop("__seq")
         else:
-            batch = batch.dropDuplicates([pk])
-
-        bucket = F.pmod(F.xxhash64(F.col(pk).cast("string")), F.lit(self.n_buckets))
-        batch = batch.withColumn("__bucket", bucket.cast("int"))
+            batch = batch.dropDuplicates(["__bucket", pk])
         path = self._path(table)
-        # Stage the micro-batch with ONE action on the streaming plan —
-        # inside foreachBatch every extra action (isEmpty, distinct
-        # collect, merge) would re-execute the whole upstream streaming
-        # aggregation, so the batch must be materialized exactly once.
-        # Staging straight to parquet replaces the former eager
-        # localCheckpoint: the same single materialization, but the
-        # bytes land partitioned by bucket, ready to swap into place —
-        # the no-prior-table path needs NO second copy at all.
         stage = f"{path}.__stage"
-        # colocate each bucket's rows before the partitioned write: with
-        # K upstream partitions, partitionBy alone writes up to
-        # K x n_buckets tiny files (measured 32x file-count inflation at
-        # sf0.1); one batch-sized shuffle on __bucket caps it at
-        # ~n_buckets files and makes the staged read/merge proportional
-        # to buckets, not to upstream parallelism
-        batch = batch.repartition(self.n_buckets, "__bucket")
         batch.write.mode("overwrite").partitionBy("__bucket").parquet(stage)
         # explicit schema: an empty batch writes no partition dirs, which
         # would make schema inference fail (and the read is cheaper)
         staged = self.spark.read.schema(batch.schema).parquet(stage)
-        # An empty micro-batch (update mode can trigger with no changed
-        # rows) writes no partition dirs: affected == [] is both the
-        # empty guard (the DDL-on-demand first write must not create a
-        # schema-less table dir that poisons later pruned reads) and the
-        # merge pruning set.
-        # r17 (r16 VERDICT #7): the staged write's own committed
-        # partition dirs ARE the touched-bucket list — read it from the
-        # directory listing (the same move compact() already makes)
-        # instead of a distinct().collect() Spark job over the staged
-        # parquet. One driver action fewer per upsert, and the lifecycle
-        # entries run N sequential upserts.
+        # The staged write's own committed partition dirs ARE the
+        # touched-bucket list (no distinct().collect() job). An empty
+        # micro-batch (update mode can trigger with no changed rows)
+        # writes none: affected == [] is both the empty guard (the
+        # DDL-on-demand first write must not create a schema-less table
+        # dir that poisons later pruned reads) and the pruning set.
         affected = [
             int(e.split("=", 1)[1])
             for e in os.listdir(stage)
@@ -213,44 +281,60 @@ class DimStore:
         if not affected:
             shutil.rmtree(stage, ignore_errors=True)
             return
-        if self.exists(table):
-            # partition-pruned: untouched buckets are never read
-            current = self.spark.read.parquet(path).filter(
-                F.col("__bucket").isin(affected)
-            )
-            keep = current.join(staged.select(pk), on=pk, how="left_anti")
-            merged = keep.unionByName(staged, allowMissingColumns=True)
-            # merge into a sibling dir, then swap bucket dirs into place:
-            # the merged plan reads the CURRENT files while writing to a
-            # different location, so no checkpoint-before-overwrite copy
-            # is needed (on a real lakehouse this whole branch is a
-            # Delta/Iceberg MERGE INTO with file-level pruning)
-            merge_dir = f"{path}.__merge"
-            merged.write.mode("overwrite").partitionBy("__bucket").parquet(merge_dir)
-            # journaled swap (crash mid-loop resumes at next touch)
-            self._swap_buckets(table, merge_dir, affected)
-            shutil.rmtree(stage, ignore_errors=True)
-        else:
+        if not self.exists(table):
             # first write: the staged dir IS the table — one rename, zero
             # extra copies (S8 DDL-on-demand)
+            self._write_schema(stage, batch.schema)
             os.replace(stage, path)
+        else:
+            # partition-pruned: untouched buckets are never read
+            current = self._scan(table).filter(F.col("__bucket").isin(affected))
+            have = {f.name: f.dataType.simpleString() for f in current.schema}
+            fits = all(
+                have.get(f.name) == f.dataType.simpleString() for f in batch.schema
+            )
+            clash = current.select(pk).join(
+                F.broadcast(staged.select(pk)), pk, "left_semi"
+            )
+            # coalesce(1): one probe task, so isEmpty is one job however
+            # many files the touched buckets hold (take(1) over N
+            # partitions runs a job per 1, 4, 16, ... partitions)
+            if fits and clash.coalesce(1).isEmpty():
+                self._commit(table, stage, current.schema, adds=affected)
+            else:
+                keep = current.join(staged.select(pk), on=pk, how="left_anti")
+                merged = keep.unionByName(
+                    staged, allowMissingColumns=True
+                ).repartition(len(affected), "__bucket")
+                # merge into a sibling dir, then swap bucket dirs into
+                # place: the merged plan reads the CURRENT files while
+                # writing to a different location, so no
+                # checkpoint-before-overwrite copy is needed (on a real
+                # lakehouse this branch is a Delta/Iceberg MERGE INTO
+                # with file-level pruning)
+                merge_dir = f"{path}.__merge"
+                merged.write.mode("overwrite").partitionBy("__bucket").parquet(
+                    merge_dir
+                )
+                self._commit(table, merge_dir, merged.schema, swaps=affected)
+                shutil.rmtree(stage, ignore_errors=True)
         n = self._upserts[table] = self._upserts.get(table, 0) + 1
         if self.auto_compact_every and n % self.auto_compact_every == 0:
             self.compact(table)
 
     def compact(self, table: str) -> None:
         """Rewrite every bucket dir down to ~one file — the OPTIMIZE/
-        bin-packing half of the lifecycle story. Each upsert's merge
-        rewrites affected buckets with one part file PER MERGE TASK, so
-        a hot bucket fragments linearly with ingest count; compaction is
-        one bucket-partitioned shuffle (each task owns a bucket, writes
-        one file) followed by the same atomic bucket-dir swap the merge
-        path uses. O(table) read+write, run every N upserts — amortized
-        O(table/N) per batch, the standard LSM/lakehouse trade."""
+        bin-packing half of the lifecycle story. Each insert commit adds
+        a file to every bucket it touches, so buckets fragment linearly
+        with ingest count; compaction is one bucket-partitioned shuffle
+        (each task owns a bucket, writes one file) followed by the same
+        journaled bucket-dir swap the merge path uses. O(table)
+        read+write, run every N upserts — amortized O(table/N) per
+        batch, the standard LSM/lakehouse trade."""
         path = self._path(table)
         if not self.exists(table):
             return
-        df = self.spark.read.parquet(path)
+        df = self._scan(table)
         out = f"{path}.__compact"
         (
             df.repartition(self.n_buckets, "__bucket")
@@ -263,8 +347,7 @@ class DimStore:
             for e in os.listdir(out)
             if e.startswith("__bucket=")
         ]
-        # journaled swap (crash mid-loop resumes at next touch)
-        self._swap_buckets(table, out, swaps)
+        self._commit(table, out, df.schema, swaps=swaps)
 
     def delete(self, table: str, keys: DataFrame, pk: str = "id") -> None:
         """Retention: remove the rows whose ``pk`` appears in ``keys`` —
@@ -288,9 +371,7 @@ class DimStore:
         ]
         if not affected:
             return
-        current = self.spark.read.parquet(path).filter(
-            F.col("__bucket").isin(affected)
-        )
+        current = self._scan(table).filter(F.col("__bucket").isin(affected))
         keep = current.join(doomed.select(pk), on=pk, how="left_anti")
         merge_dir = f"{path}.__merge"
         keep.write.mode("overwrite").partitionBy("__bucket").parquet(merge_dir)
@@ -304,7 +385,7 @@ class DimStore:
             if os.path.isdir(os.path.join(merge_dir, f"__bucket={b}"))
         ]
         removes = [b for b in affected if b not in set(swaps)]
-        self._swap_buckets(table, merge_dir, swaps, removes)
+        self._commit(table, merge_dir, current.schema, swaps=swaps, removes=removes)
         # deleting the last row of every bucket must leave a READABLE
         # empty table, not a schema-less dir (exists() true but every
         # read/upsert raising UNABLE_TO_INFER_SCHEMA — a vacuum that

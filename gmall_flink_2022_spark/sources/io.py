@@ -27,7 +27,7 @@ import os
 import time
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, types as T
 
 from ..schemas import TABLE_SCHEMAS
 
@@ -110,6 +110,23 @@ def read_stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         .option("pathGlobFilter", f"{name}.parquet")
         .load(sf_dir)
     )
+
+
+def local_frame(spark: SparkSession, rows: Sequence[Sequence], ddl: str) -> DataFrame:
+    """A driver-built literal table (a config table, a trained artifact)
+    as a JVM ``LocalRelation``: actions on it run no Spark job. Built
+    from an Arrow table, which needs no Arrow session conf and keeps an
+    empty ``rows`` typed; ``spark.createDataFrame(<list>)`` instead makes
+    a Python-RDD ``LogicalRDD``, and every action on it runs a
+    Python-worker job."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = T.StructType.fromDDL(ddl)
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], schema=to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def file_batches(frames: Sequence[DataFrame], in_dir: str) -> DataFrame:

@@ -5,7 +5,9 @@ dim-enrichment join reading the settled store (the J3 path end-to-end)."""
 from __future__ import annotations
 
 import json
+import os
 
+import pytest
 from pyspark.sql import Row, functions as F
 
 from gmall_flink_2022_spark.operators.dwd import route_cdc
@@ -407,3 +409,106 @@ def test_delete_all_crash_recovery_drops_table(spark, tmp_path, monkeypatch):
     assert store.exists("t") is False  # recovery ran inside exists()
     store.upsert("t", _users(spark, 3), pk="id")
     assert store.read("t").count() == 3
+
+
+# ------------------------------------- insert commit and the schema file
+
+
+def _bucket_files(store, table):
+    path = store._path(table)
+    return {
+        os.path.join(d, f)
+        for d in os.listdir(path)
+        if d.startswith("__bucket=")
+        for f in os.listdir(os.path.join(path, d))
+        if f.endswith(".parquet")
+    }
+
+
+def test_insert_commit_adds_files_and_rewrites_no_bucket(spark, tmp_path):
+    """A batch of brand-new keys is committed by moving its staged files
+    into their bucket dirs: every file already in the table stays, and
+    the table gains one file per touched bucket."""
+    store = DimStore(spark, str(tmp_path / "dim"), n_buckets=4)
+    store.upsert("t", _users(spark, 40), pk="id")
+    before = _bucket_files(store, "t")
+    fresh = spark.createDataFrame(
+        [(i, f"n{i}") for i in range(100, 120)], "id long, name string"
+    )
+    store.upsert("t", fresh, pk="id")
+    after = _bucket_files(store, "t")
+    assert before < after
+    assert len(after - before) <= store.n_buckets
+    rows = {r["id"]: r["name"] for r in store.read("t").collect()}
+    assert rows == {**{i: f"u{i}" for i in range(40)},
+                    **{i: f"n{i}" for i in range(100, 120)}}
+
+
+def test_upsert_mixed_batch_replaces_existing_key(spark, tmp_path):
+    """One existing key and one new key in one batch: the clash sends the
+    batch down the merge path, so the existing row is replaced, not
+    duplicated, and each rewritten bucket holds one file."""
+    store = DimStore(spark, str(tmp_path / "dim"), n_buckets=4)
+    store.upsert("t", _users(spark, 8), pk="id")
+    store.upsert(
+        "t", spark.createDataFrame([(3, "v2"), (50, "n")], "id long, name string"),
+        pk="id",
+    )
+    rows = sorted((r["id"], r["name"]) for r in store.read("t").collect())
+    want = {i: f"u{i}" for i in range(8)} | {3: "v2", 50: "n"}
+    assert rows == sorted(want.items())
+    assert store.file_count("t") <= store.n_buckets
+
+
+@pytest.mark.parametrize("touch", ["exists", "upsert"])
+def test_insert_crash_mid_move_recovers(spark, tmp_path, monkeypatch, touch):
+    """An insert commit that crashes after its journal and after moving
+    one bucket's files is completed by the next touch, with the rows an
+    uninterrupted upsert gives. The journal names the stage dir, so an
+    upsert must replay it before staging over that dir."""
+    store = DimStore(spark, str(tmp_path / "dim"), n_buckets=8)
+    store.upsert("t", _users(spark), pk="id")
+    fresh = spark.createDataFrame(
+        [(i, f"n{i}") for i in range(100, 140)], "id long, name string"
+    )
+    orig = DimStore._apply_adds
+
+    def crashy(self, path, src_dir, adds):
+        orig(self, path, src_dir, list(adds)[:1])
+        raise RuntimeError("simulated crash mid-move")
+
+    monkeypatch.setattr(DimStore, "_apply_adds", crashy)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        store.upsert("t", fresh, pk="id")
+    assert os.path.isfile(store._journal_path("t"))
+    monkeypatch.undo()
+
+    want = {i: f"u{i}" for i in range(40)} | {i: f"n{i}" for i in range(100, 140)}
+    if touch == "exists":
+        assert store.exists("t")  # the replay runs here
+    else:
+        store.upsert("t", spark.createDataFrame([(7, "v2")], "id long, name string"),
+                     pk="id")
+        want[7] = "v2"
+    assert not os.path.isfile(store._journal_path("t"))
+    rows = {r["id"]: r["name"] for r in store.read("t").collect()}
+    assert rows == want
+
+
+def test_read_with_schema_file_runs_no_job(spark, tmp_path):
+    """Every commit writes ``_schema.json``; a read with it runs no
+    schema-inference job, and a table without it still reads (by
+    inference)."""
+    from .test_table_catalog import _jobs_run_by
+
+    store = DimStore(spark, str(tmp_path / "dim"), n_buckets=4)
+    store.upsert("t", _users(spark, 8), pk="id")
+    store.upsert(
+        "t", spark.createDataFrame([(3, "v2")], "id long, name string"), pk="id"
+    )
+    schema_file = os.path.join(store._path("t"), "_schema.json")
+    assert os.path.isfile(schema_file)
+    assert _jobs_run_by(spark, lambda: store.read("t")) == 0
+    assert store.read("t").columns == ["id", "name"]
+    os.remove(schema_file)
+    assert sorted(r["id"] for r in store.read("t").collect()) == list(range(8))

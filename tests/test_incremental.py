@@ -140,6 +140,84 @@ def test_incremental_broadcasts_arrival_side(spark, sf_dir):
     assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
 
 
+def _index_scan_parents(plan, tables) -> dict[str, list[str]]:
+    """For each file scan of one of ``tables`` in a physical plan: the
+    class of its nearest ancestor that is a join or an exchange (None
+    when it has none), keyed by table."""
+    wrappers = {"BroadcastHashJoinExec", "ShuffledHashJoinExec",
+                "SortMergeJoinExec", "BroadcastNestedLoopJoinExec",
+                "ShuffleExchangeExec", "BroadcastExchangeExec"}
+    found: dict[str, list[str]] = {t: [] for t in tables}
+
+    def walk(node, nearest):
+        cls = node.getClass().getSimpleName()
+        if cls == "FileSourceScanExec":
+            roots = str(node.relation().location().rootPaths())
+            for t in tables:
+                if f"/{t}" in roots:
+                    found[t].append(nearest)
+        kids = node.children()
+        for i in range(kids.size()):
+            walk(kids.apply(i), cls if cls in wrappers else nearest)
+
+    walk(plan, None)
+    return found
+
+
+def test_incremental_index_never_moves(spark, sf_dir):
+    """The scale contract of the decision plan, AQE off so the static
+    plan is the one that runs: each index table is scanned once, and
+    every index row goes straight into the streamed side of a broadcast
+    hash join against the arrival side. No index row reaches a shuffle
+    (or a broadcast) before that probe; only its arrival-bounded output
+    is aggregated."""
+    from gmall_flink_2022_spark.sources.io import read_table
+
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
+    store = _store(spark)
+    inc.build_dedup_index(store, docs)
+    arrivals = docs.limit(25).select(
+        (F.col("doc_id") + 900000).alias("doc_id"), "text"
+    )
+    prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        plan = inc.incremental_dedup(store, arrivals)._jdf.queryExecution().executedPlan()
+        parents = _index_scan_parents(plan, [inc.DIGEST_TABLE, inc.SIG_TABLE])
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prev)
+    assert parents == {
+        inc.DIGEST_TABLE: ["BroadcastHashJoinExec"],
+        inc.SIG_TABLE: ["BroadcastHashJoinExec"],
+    }
+
+
+def test_ingest_job_budget(spark):
+    """A warm arrival batch runs at most the measured number of Spark
+    jobs: the arrival checkpoint, the decision checkpoint (its
+    broadcasts and one aggregation) and two upserts, each a staged
+    write plus a one-task clash probe. The split was 1 + 6 + 5 + 4 on
+    the fixture below, against 33 before the decision plan and the
+    insert commit."""
+    from .test_table_catalog import _jobs_run_by
+
+    store = _store(spark)
+    inc.build_dedup_index(store, _df(spark, CORPUS))
+    warm = _df(spark, [(70, "a warm up batch of words that is new here"),
+                       (71, CORPUS[0][1])])
+    inc.ingest_with_dedup(store, warm)
+    batch = _df(spark, [
+        (80, "another brand new document with enough words in it"),
+        (81, CORPUS[1][1] + " extra"),
+        (82, CORPUS[2][1]),
+    ])
+    out = []
+    n = _jobs_run_by(spark, lambda: out.append(inc.ingest_with_dedup(store, batch)))
+    got = {r["doc_id"]: r["dup_kind"] for r in out[0].collect()}
+    assert got == {80: "new", 81: "near", 82: "exact"}
+    assert n <= 16, n
+
+
 def test_embed_incremental_decisions_and_advance(spark):
     """Vector twin: exact = identical vector, near = scaled copy
     (cosine 1.0), new otherwise; batch 2 sees batch 1's additions; the

@@ -94,3 +94,34 @@ def test_shipped_package_zip_removed_at_exit(tmp_path, sf_dir):
     env = dict(os.environ, TMPDIR=str(tmp_path))
     subprocess.run([sys.executable, "-c", script], env=env, check=True, timeout=120)
     assert not list(tmp_path.glob("gmall_pkg_*"))
+
+
+def test_local_frames_run_no_job(spark, sf_dir):
+    """Driver-built literal tables are JVM local relations: collecting
+    one runs no Spark job, an empty one included, where a Python-list
+    ``createDataFrame`` ran a Python-worker job on every action. Covers
+    the helper, the merge table ``bpe_train`` returns and the route
+    config table of ``dwd_db_route``."""
+    from gmall_flink_2022_spark.llm import bpe
+    from gmall_flink_2022_spark.sources.io import local_frame
+
+    ddl = "step long, left_sym string"
+    frames = {
+        "rows": local_frame(spark, [(1, "a"), (2, "b")], ddl),
+        "empty": local_frame(spark, [], ddl),
+        "bpe_train": bpe.bpe_train(
+            local_frame(spark, [("low lower lowest",)], "text string"), n_merges=2
+        ),
+    }
+    assert _fields(frames["empty"].schema) == ["step:bigint", "left_sym:string"]
+    rows = {}
+    jobs = {
+        k: _jobs_run_by(spark, lambda k=k: rows.update({k: frames[k].collect()}))
+        for k in frames
+    }
+    assert jobs == dict.fromkeys(frames, 0)
+    assert rows["rows"] == [(1, "a"), (2, "b")] and rows["empty"] == []
+    assert len(rows["bpe_train"]) == 2
+    route = plans.REGISTRY["dwd_db_route"].fn(spark, sf_dir)
+    leaves = route._jdf.queryExecution().optimizedPlan().toString()
+    assert "LocalRelation" in leaves and "LogicalRDD" not in leaves
