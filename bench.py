@@ -24,6 +24,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from gmall_flink_2022_spark import plans  # noqa: E402
+from gmall_flink_2022_spark.llm import cachereg  # noqa: E402
 from gmall_flink_2022_spark.session import get_spark  # noqa: E402
 
 
@@ -41,6 +42,7 @@ def main() -> None:
         except Exception:
             pass
         spark.catalog.clearCache()
+        cachereg.release_all()
 
     reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
     timings: dict[str, float] = {}
@@ -51,11 +53,13 @@ def main() -> None:
             q.fn(spark, sf_dir).count()
             samples.append(time.perf_counter() - t0)
         timings[name] = round(statistics.median(samples), 3)
-        # queries persist() their own intermediates; drop them BETWEEN
-        # queries (not between reps — the median stays a warm-cache
-        # number, comparable across rounds) so the suite's memory
-        # footprint is one query's caches, not the whole set's
+        # queries persist() and stage() their own intermediates; drop
+        # them BETWEEN queries (not between reps — the median stays a
+        # warm-cache number, comparable across rounds) so the suite's
+        # memory footprint is one query's caches and checkpoint blocks,
+        # not the whole set's
         spark.catalog.clearCache()
+        cachereg.release_all()
 
     total = round(sum(timings.values()), 3)
     print(

@@ -1,36 +1,42 @@
-"""Full BPE-merge tokenizer training (Sennrich et al. 2016), rendered
-Spark-first as an iterative bulk-synchronous loop — the same discipline
-as llm/graph.py PageRank: per-round lineage truncation, all data-sized
-work distributed, only O(1) scalars on the driver.
+"""Full BPE-merge tokenizer training and inference (Sennrich et al.
+2016), rendered Spark-first over the WORD-FREQUENCY table, not the
+corpus: the corpus collapses to (word, freq) once (one shuffle), and
+every later step is a projection over the distinct words. At 100 TB the
+corpus scan happens exactly once; merge rounds scale with the (much
+smaller, bounded) word vocabulary.
 
-Training state is the WORD-FREQUENCY symbol table, not the corpus: the
-corpus collapses to (word, freq) once (one shuffle), and every merge
-round then operates on rows (wid, freq, pos, sym) — the symbol sequence
-of each distinct word. At 100 TB the corpus scan happens exactly once;
-rounds scale with the (much smaller, bounded) word vocabulary.
+Each word's symbols are one ``array<string>`` column, and applying a
+merge (L, R) is one ``aggregate`` fold over that array (:func:`_merge`):
+the accumulator is (out, pending), where ``pending`` says the last
+element of ``out`` is an unmerged L. On ``x == R`` with ``pending`` the
+last element becomes L||R; otherwise ``x`` is appended and ``pending``
+becomes ``x == L``. That is exactly greedy left-to-right merging within
+a word (what sentencepiece/HF do): "aaaa" under (a, a) gives "aa|aa".
+Applying a merge LIST is an outer ``aggregate`` over a literal
+``array<struct<l, r>>`` with the fold inside it (:func:`apply_merges`),
+so any number of merges is one projection per word and the plan depth
+never grows. The fold is built with the Column API, so symbols such as
+``'``, ``\\``, ``|`` or ``$`` need no escaping.
 
-Per round, ONE shuffle on wid covers everything: pair counting reads
-lead(sym) over (wid, pos), and the merge transformation is three more
-window passes over the SAME partitioning (match marking, island parity,
-drop+renumber), so they pipeline without re-shuffling. The selected
-pair is one row collected to the driver — the standard iterative-BSP
-control scalar (cf. dup_clusters convergence checks), never data.
-
-Greedy left-to-right merge semantics (what sentencepiece/HF do within a
-word) are set-based via gaps-and-islands: positions where (sym, next) =
-(a, b) form islands of CONSECUTIVE matches (only possible when a == b,
-e.g. "aaaa" under (a,a)); within an island the 1st, 3rd, ... matches
-take, and each taken match absorbs its following row. Bit-identical
-across engines: counts are integer sums, ties break on (count DESC,
-left, right) with binary string collation on both engines.
+Training re-derives each round's state from the checkpointed initial
+symbols with the merges chosen so far, counts adjacent pairs
+(``zip_with`` over the array, explode, group by), and collects the one
+top pair — the standard iterative-BSP control scalar, never data. Ties
+break on (count DESC, left, right) with binary string collation on both
+engines, and counts are integer sums, so merge tables are bit-identical
+to the DuckDB oracle, which keeps the set-based gaps-and-islands form of
+the same greedy rule (:func:`_merge_apply_cte_sql`).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window as W, functions as F
+from collections.abc import Sequence
+
+from pyspark.sql import Column, DataFrame, functions as F
 
 from ..sources.io import local_frame
 
+from .cachereg import stage
 from .text import BPE_RE
 
 BPE_DEFAULT_MERGES = 8
@@ -48,70 +54,82 @@ def word_freqs(df: DataFrame, text_col: str) -> DataFrame:
     )
 
 
-def _initial_symbols(wf: DataFrame) -> DataFrame:
-    """(word, freq) -> one row per character: (wid, freq, pos, sym),
-    pos 1-based. substring() is character-based on both engines."""
-    chars = F.transform(
-        F.sequence(F.lit(1), F.length("word")),
-        lambda i: F.substring(F.col("word"), i, 1),
-    )
-    return wf.select(
-        F.col("word").alias("wid"),
-        "freq",
-        F.posexplode(chars).alias("pos0", "sym"),
-    ).select("wid", "freq", (F.col("pos0") + 1).alias("pos"), "sym")
-
-
-def merge_step(syms: DataFrame, left: str, right: str) -> DataFrame:
-    """Apply ONE merge (left, right) to a symbol table (wid, freq, pos,
-    sym) with greedy left-to-right semantics. Pure window algebra over
-    the (wid, pos) ordering — no Python, no extra shuffle beyond the
-    wid partitioning the caller's pair count already established."""
-    w = W.partitionBy("wid").orderBy("pos")
-    d1 = syms.select(
-        "wid",
-        "freq",
-        "pos",
-        "sym",
-        F.lead("sym").over(w).alias("nxt"),
-        F.row_number().over(w).alias("rn"),
-    ).withColumn(
-        "mt",
-        F.coalesce(
-            (F.col("sym") == F.lit(left)) & (F.col("nxt") == F.lit(right)),
-            F.lit(False),
-        ),
-    )
-    w_m = W.partitionBy("wid", "mt").orderBy("pos")
-    d2 = d1.withColumn("isl", F.col("rn") - F.row_number().over(w_m))
-    w_i = W.partitionBy("wid", "mt", "isl").orderBy("pos")
-    d3 = d2.withColumn(
-        "take", F.col("mt") & (F.row_number().over(w_i) % 2 == 1)
-    )
-    d4 = d3.withColumn("ptk", F.lag("take").over(w)).filter(
-        ~F.coalesce(F.col("ptk"), F.lit(False))
-    )
-    return d4.select(
-        "wid",
-        "freq",
-        F.row_number().over(w).alias("pos"),
-        F.when(F.col("take"), F.concat("sym", "nxt")).otherwise(F.col("sym")).alias(
-            "sym"
-        ),
+def symbols(word: Column) -> Column:
+    """A word's initial symbols: its characters, as ``array<string>``.
+    substring() is character-based on both engines."""
+    return F.transform(
+        F.sequence(F.lit(1), F.length(word)), lambda i: F.substring(word, i, 1)
     )
 
 
-def _run_merges(
-    syms: DataFrame, n_merges: int
-) -> tuple[list[tuple[int, str, str, int]], DataFrame]:
-    """The training loop: returns (merge list, final symbol table)."""
-    w = W.partitionBy("wid").orderBy("pos")
+def _merge(syms: Column, left: Column, right: Column) -> Column:
+    """Apply ONE merge (left, right) to a symbol array with greedy
+    left-to-right semantics: one fold, accumulator (out, pending)."""
+    def step(acc: Column, x: Column) -> Column:
+        out = acc["out"]
+        return F.when(
+            acc["pending"] & (x == right),
+            F.struct(
+                F.concat(
+                    F.slice(out, 1, F.size(out) - 1), F.array(F.concat(left, right))
+                ).alias("out"),
+                F.lit(False).alias("pending"),
+            ),
+        ).otherwise(
+            F.struct(
+                F.concat(out, F.array(x)).alias("out"), (x == left).alias("pending")
+            )
+        )
+
+    start = F.struct(
+        F.array().cast("array<string>").alias("out"), F.lit(False).alias("pending")
+    )
+    return F.aggregate(syms, start, step, lambda acc: acc["out"])
+
+
+def apply_merges(syms: Column, merges: Sequence[tuple[str, str]]) -> Column:
+    """Apply ``merges`` (in list order) to a symbol array: an outer fold
+    over the merge list, given as a literal ``array<struct<l, r>>``,
+    with :func:`_merge` inside it — one projection for any number of
+    merges."""
+    table = F.array(
+        *[F.struct(F.lit(a).alias("l"), F.lit(b).alias("r")) for a, b in merges]
+    ).cast("array<struct<l:string,r:string>>")
+    return F.aggregate(table, syms, lambda s, m: _merge(s, m["l"], m["r"]))
+
+
+def _word_symbols(df: DataFrame, text_col: str) -> DataFrame:
+    """(word, freq, syms): the word table with each word's initial
+    symbols — the state every merge round starts from."""
+    return word_freqs(df, text_col).select(
+        "word", "freq", symbols(F.col("word")).alias("syms")
+    )
+
+
+def _train(words: DataFrame, n_merges: int) -> list[tuple[int, str, str, int]]:
+    """The training loop over a materialized (word, freq, syms) table:
+    per round, the state is the merges so far applied to the initial
+    symbols (constant plan depth, no per-round checkpoint), and one pair
+    count collects the top (count DESC, left, right) pair. Stops early
+    when no adjacent pair is left."""
     merges: list[tuple[int, str, str, int]] = []
     for step in range(1, n_merges + 1):
+        s = apply_merges(F.col("syms"), [(a, b) for _, a, b, _ in merges])
+        n = F.size("s") - 1
         top = (
-            syms.select("wid", "freq", "sym", F.lead("sym").over(w).alias("nxt"))
-            .filter(F.col("nxt").isNotNull())
-            .groupBy("sym", "nxt")
+            words.select("freq", s.alias("s"))
+            .filter(n > 0)
+            .select(
+                "freq",
+                F.explode(
+                    F.zip_with(
+                        F.slice("s", 1, n),
+                        F.slice("s", 2, n),
+                        lambda a, b: F.struct(a.alias("sym"), b.alias("nxt")),
+                    )
+                ).alias("p"),
+            )
+            .groupBy(F.col("p.sym").alias("sym"), F.col("p.nxt").alias("nxt"))
             .agg(F.sum("freq").alias("n"))
             .orderBy(F.desc("n"), F.asc("sym"), F.asc("nxt"))
             .limit(1)
@@ -120,14 +138,7 @@ def _run_merges(
         if top is None:
             break
         merges.append((step, top["sym"], top["nxt"], top["n"]))
-        # lazy checkpoint: lineage still truncates at first use, but the
-        # round pays ONE action (the next round's top-pair collect
-        # materializes it) instead of two — halves driver round-trips,
-        # which dominate wall time for this vocabulary-sized state
-        syms = merge_step(syms, top["sym"], top["nxt"]).localCheckpoint(
-            eager=False
-        )
-    return merges, syms
+    return merges
 
 
 def bpe_train(
@@ -137,31 +148,28 @@ def bpe_train(
 ) -> DataFrame:
     """Train ``n_merges`` BPE merges over a corpus; returns the merge
     table (step, left_sym, right_sym, pair_count) — the artifact a BPE
-    tokenizer ships. Stops early (fewer rows) if the corpus runs out of
-    adjacent pairs. llm_bpe_pair_counts computes round 1's counting
-    core; this iterates count -> argmax -> merge -> re-tokenize with a
-    localCheckpoint per round so lineage stays O(1)-deep."""
-    spark = df.sparkSession
-    syms = _initial_symbols(word_freqs(df, text_col)).localCheckpoint(eager=True)
-    merges, _ = _run_merges(syms, n_merges)
+    tokenizer ships — as a driver-built local relation. Stops early
+    (fewer rows) if the corpus runs out of adjacent pairs.
+    llm_bpe_pair_counts computes round 1's counting core; this iterates
+    count -> argmax -> re-encode over the word table, which is
+    checkpointed once (``cachereg.stage``)."""
+    merges = _train(stage(_word_symbols(df, text_col)), n_merges)
     return local_frame(
-        spark, merges, "step long, left_sym string, right_sym string, pair_count long"
+        df.sparkSession,
+        merges,
+        "step long, left_sym string, right_sym string, pair_count long",
     )
 
 
-def _encoded_vocab(final: DataFrame) -> DataFrame:
-    """Final symbol table -> (word, freq, n_syms, encoded) with
-    ``encoded`` the symbol sequence joined by '|'."""
-    kept = F.array_sort(F.collect_list(F.struct("pos", "sym")))
-    return (
-        final.groupBy("wid", "freq")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_syms"),
-            F.concat_ws(
-                "|", F.transform(kept, lambda s: s["sym"])
-            ).alias("encoded"),
-        )
-        .select(F.col("wid").alias("word"), "freq", "n_syms", "encoded")
+def _encoded(words: DataFrame, merges: Sequence[tuple[str, str]]) -> DataFrame:
+    """(word, freq, syms) -> (word, freq, n_syms, encoded) with
+    ``encoded`` the merged symbol sequence joined by '|'."""
+    s = apply_merges(F.col("syms"), merges)
+    return words.select("word", "freq", s.alias("s")).select(
+        "word",
+        "freq",
+        F.size("s").cast("long").alias("n_syms"),
+        F.concat_ws("|", "s").alias("encoded"),
     )
 
 
@@ -175,13 +183,13 @@ def bpe_encode(
     (word, freq, n_syms, encoded) with ``encoded`` the symbol sequence
     joined by '|'. n_syms * freq summed over words is the corpus token
     count under the trained tokenizer (the fertility/compression
-    statistic a tokenizer-training pipeline reports). Same loop, same
-    scale shape as :func:`bpe_train`; encoding a DIFFERENT corpus with a
-    shipped merge table is :func:`bpe_apply`."""
-    wf = word_freqs(df, text_col)
-    syms = _initial_symbols(wf).localCheckpoint(eager=True)
-    _, final = _run_merges(syms, n_merges)
-    return _encoded_vocab(final)
+    statistic a tokenizer-training pipeline reports). Same loop as
+    :func:`bpe_train`, then one projection over the same checkpointed
+    word table; encoding a DIFFERENT corpus with a shipped merge table is
+    :func:`bpe_apply`."""
+    words = stage(_word_symbols(df, text_col))
+    merges = _train(words, n_merges)
+    return _encoded(words, [(a, b) for _, a, b, _ in merges])
 
 
 def bpe_apply(
@@ -208,27 +216,27 @@ def bpe_apply(
 
     Scale shape: the merge table is vocabulary-bounded (n_merges rows)
     and collects to the driver like any config table — the reference's
-    broadcast-config discipline; the corpus-sized work is the one
-    word_freqs pass plus ``n_merges`` window passes over the word
-    table, all sharing the wid partitioning."""
+    broadcast-config discipline — and enters the plan as a literal. The
+    corpus-sized work is the one word_freqs pass; the merges are one
+    projection per distinct word (:func:`apply_merges`). The returned
+    plan is lazy and reads nothing but ``df``: building it runs no job
+    when ``merges`` is a local relation."""
     # bounded: the shipped artifact is n_merges rows. Sorted here, not
     # with orderBy: a Spark sort runs jobs even over a local relation
     rows = sorted(
         merges.select("step", "left_sym", "right_sym").collect(),
         key=lambda r: r["step"],
     )
-    syms = _initial_symbols(word_freqs(df, text_col)).localCheckpoint(eager=True)
-    for r in rows:
-        syms = merge_step(syms, r["left_sym"], r["right_sym"]).localCheckpoint(
-            eager=False
-        )
-    return _encoded_vocab(syms)
+    return _encoded(
+        _word_symbols(df, text_col), [(r["left_sym"], r["right_sym"]) for r in rows]
+    )
 
 
 def _merge_apply_cte_sql(src: str, dst: str, mname: str, tname: str) -> str:
     """CTE text applying the pair selected by ``tname`` to symbol state
-    ``src``, producing ``dst`` — the SQL twin of :func:`merge_step`
-    (match -> greedy islands -> absorb + renumber), shared between the
+    ``src``, producing ``dst`` — the set-based SQL form of the greedy
+    rule :func:`_merge` folds (match -> greedy islands -> absorb +
+    renumber over one row per symbol), shared between the
     train chain (src=s{i}) and the held-out apply chain (src=a{i})."""
     return f"""{mname} AS MATERIALIZED (
         SELECT wid, freq, pos, sym, nxt,
@@ -298,7 +306,7 @@ def load_merges(store) -> DataFrame:
 def _pair_argmax_cte_sql(src: str, p: str, t: str) -> str:
     """Count + argmax CTE pair over symbol state ``src``: ``p`` = pair
     frequencies, ``t`` = the one selected (count DESC, left, right) pair
-    — the SQL twin of the top-pair collect in :func:`_run_merges`."""
+    — the SQL twin of the top-pair collect in :func:`_train`."""
     return f"""{p} AS MATERIALIZED (
         SELECT sym, nxt, SUM(freq) AS n FROM (
             SELECT freq, sym,

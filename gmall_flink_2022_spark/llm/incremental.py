@@ -205,10 +205,14 @@ def _decide(
                                 i -> concat_ws(' ', slice(toks, i, {n}))),
                       array()) AS grams
             FROM x)),
+        -- an unsigned arrival explodes to no bucket: a WHERE mh0 IS NOT
+        -- NULL here would be pushed below the signature projection and
+        -- tokenize and hash every arrival twice
         ab AS (
-          SELECT doc_id AS a_id, explode({band_array('mh')}) AS bucket,
+          SELECT doc_id AS a_id,
+                 explode(IF(mh0 IS NULL, array(), {band_array('mh')})) AS bucket,
                  {", ".join(f"mh{i} AS a{i}" for i in hs)}
-          FROM s WHERE mh0 IS NOT NULL),
+          FROM s),
         cb AS (
           SELECT doc_id AS c_id, explode({band_array('mh')}) AS bucket,
                  {", ".join(f"mh{i} AS c{i}" for i in hs)}

@@ -38,6 +38,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..sources.io import local_frame
+
 #: deepest bundled rule, in labels (k12.ma.us = 3); candidate suffixes
 #: of length 1..MAX are probed. A full-PSL deployment sets 5 (the
 #: list's deepest entries) — one more broadcast probe, same plan.
@@ -154,7 +156,7 @@ def psl_rules_df(spark: SparkSession) -> DataFrame:
     """The bundled rules as a (suffix, kind) frame — the dim a
     deployment persists once (DimStore / any lakehouse dim table) and
     broadcasts everywhere."""
-    return spark.createDataFrame(PSL_RULES, "suffix string, kind string")
+    return local_frame(spark, PSL_RULES, "suffix string, kind string")
 
 
 def registrable_domain_psl(

@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..functions.tokenize import tokenize_col
+from ..sources.io import local_frame
 
 BM25_K1 = 1.2
 BM25_B = 0.75
@@ -68,8 +69,10 @@ def bm25_topk(
     corpus = base.agg(
         F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("total_len")
     )
-    qdf = spark.createDataFrame(
-        [(qid, t) for qid, terms in queries for t in terms], ["query_id", "term"]
+    qdf = local_frame(
+        spark,
+        [(qid, t) for qid, terms in queries for t in terms],
+        "query_id long, term string",
     )
     sel = postings.join(F.broadcast(qdf), "term")
     dft = sel.groupBy("term").agg(F.countDistinct("doc_id").alias("df"))

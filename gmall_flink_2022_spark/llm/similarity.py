@@ -18,6 +18,8 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import Column, DataFrame, Window as W, functions as F
 
+from ..sources.io import local_frame
+
 
 def cosine(a: Column, b: Column) -> Column:
     """Cosine similarity of two array<float/double> columns, computed in
@@ -580,9 +582,7 @@ def knn_ivf(
     centers = [
         (i, [float(x) for x in ctr]) for i, ctr in enumerate(km.clusterCenters())
     ]
-    cdf = queries.sparkSession.createDataFrame(
-        centers, "cell int, centroid array<double>"
-    )
+    cdf = local_frame(queries.sparkSession, centers, "cell int, centroid array<double>")
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
     )
@@ -927,7 +927,8 @@ def _pq_codebook(
         .limit(ksub)
         .collect()
     )
-    return embs.sparkSession.createDataFrame(
+    return local_frame(
+        embs.sparkSession,
         [(i + 1, list(r["vec"])) for i, r in enumerate(picked)],
         "cid long, cvec array<float>",
     )

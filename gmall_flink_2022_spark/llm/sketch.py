@@ -28,6 +28,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..sources.io import local_frame
 from .text import _toks_or_empty, _u32
 
 CMS_WIDTH = 1024
@@ -619,7 +620,7 @@ def histogram_quantiles(
         )
         .cast("long"),
     )
-    qdf = spark.createDataFrame([(float(q),) for q in qs], "q double")
+    qdf = local_frame(spark, [(float(q),) for q in qs], "q double")
     j = cum.crossJoin(F.broadcast(qdf))
     return (
         j.filter(F.col("cum") >= F.ceil(F.col("q") * F.col("n")))

@@ -3842,9 +3842,11 @@ def llm_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         store = DimStore(spark, stage)
         bpe_mod.save_merges(store, merges)
         shipped = bpe_mod.load_merges(store)
+        # bpe_apply collects the merges into its plan as literals, so
+        # the returned plan no longer reads the store removed below
         return bpe_mod.bpe_apply(
             docs.filter(F.col("doc_id") % 2 == 1), shipped, "text"
-        ).localCheckpoint(eager=True)
+        )
     finally:
         shutil.rmtree(stage, ignore_errors=True)
 

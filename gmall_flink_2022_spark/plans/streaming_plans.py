@@ -28,7 +28,7 @@ from pyspark.sql.types import StructType
 from ..llm import dsir, incremental as inc, sketch as sketch_mod, urls
 from ..llm.sampling import _u32
 from ..sources.dim_store import DimStore
-from ..sources.io import file_batches, read_stream_table, read_table
+from ..sources.io import file_batches, local_frame, read_stream_table, read_table
 from ..streaming.bounce_state import bounce_detect_stateful
 from ..streaming.eos import IdempotentBatchStore
 from ..streaming.runner import run_available_now, run_stream_to_table
@@ -93,7 +93,7 @@ def _run_update_upsert(agg: DataFrame, table: str, pk: str = "_k") -> DataFrame:
         # of letting store.read raise on the missing path.
         if not store.exists(table):
             schema = StructType([f for f in agg.schema.fields if f.name != pk])
-            return spark.createDataFrame([], schema)
+            return local_frame(spark, [], schema)
         # materialize before the finally deletes the store files the
         # returned plan would otherwise lazily read after cleanup
         return store.read(table).drop(pk).localCheckpoint(eager=True)
@@ -116,7 +116,7 @@ def _replay_last_batch(
     the caller may delete the store."""
     ids = store.committed_ids()
     if not ids:  # empty input -> zero committed micro-batches
-        return store.spark.createDataFrame([], empty_schema)
+        return local_frame(store.spark, [], empty_schema)
     last = ids[-1]
     # materialize before the overwrite-replay (same files would
     # otherwise be deleted out from under the lazy scan)
@@ -270,7 +270,8 @@ def stream_user_jump(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = read_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "ts", "event_type"
     )
-    sentinel = spark.createDataFrame(
+    sentinel = local_frame(
+        spark,
         [(999999999, -1, "2030-01-01 00:00:00", "click")],
         "event_id long, user_id long, cts string, event_type string",
     ).select(
@@ -357,7 +358,8 @@ def stream_payment_wide_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = read_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "ts", "event_type"
     )
-    sentinels = spark.createDataFrame(
+    sentinels = local_frame(
+        spark,
         [
             (999999998, -1, "2030-01-01 00:00:00", "purchase"),
             (999999999, -1, "2030-01-01 00:00:00", "view"),
@@ -878,7 +880,8 @@ def session_window_scale_agg(src: DataFrame) -> DataFrame:
 )
 def stream_session_window_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = read_table(spark, sf_dir, "events").select("event_id", "user_id", "ts")
-    sentinel = spark.createDataFrame(
+    sentinel = local_frame(
+        spark,
         [(999999999, -1, "2030-01-01 00:00:00")],
         "event_id long, user_id long, cts string",
     ).select("event_id", "user_id", F.to_timestamp("cts").alias("ts"))
@@ -1163,18 +1166,14 @@ def stream_events_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stream_db_route(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dwd import route_cdc
-    from .warehouse import _ROUTES
+    from .warehouse import _route_config
 
     ev = (
         read_stream_table(spark, sf_dir, "events")
         .withColumnRenamed("event_type", "tableName")
         .withColumn("type", F.lit("insert"))
     )
-    cfg = spark.createDataFrame(
-        [(s, "insert", t, tbl) for s, t, tbl in _ROUTES],
-        "source_table string, operate_type string, sink_type string, sink_table string",
-    )
-    routed = route_cdc(ev, cfg).select(
+    routed = route_cdc(ev, _route_config(spark)).select(
         "event_id",
         "user_id",
         F.col("tableName").alias("event_type"),
@@ -2245,7 +2244,8 @@ def stream_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = read_table(spark, sf_dir, "events").select(
         "user_id", "ts", "event_type"
     )
-    sentinel = spark.createDataFrame(
+    sentinel = local_frame(
+        spark,
         [(-1, "2030-01-01 00:00:00", "click")],
         "user_id long, cts string, event_type string",
     ).select("user_id", F.to_timestamp("cts").alias("ts"), "event_type")

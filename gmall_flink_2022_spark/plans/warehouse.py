@@ -118,6 +118,15 @@ _ROUTES = [
 ]
 
 
+def _route_config(spark: SparkSession) -> DataFrame:
+    """The routing table as a driver-built local relation."""
+    return local_frame(
+        spark,
+        [(s, "insert", t, tbl) for s, t, tbl in _ROUTES],
+        "source_table string, operate_type string, sink_type string, sink_table string",
+    )
+
+
 @register(
     "dwd_db_route",
     oracle="""
@@ -136,12 +145,7 @@ _ROUTES = [
 def dwd_db_route(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events").withColumnRenamed("event_type", "tableName")
     ev = ev.withColumn("type", F.lit("insert"))
-    cfg = local_frame(
-        spark,
-        [(s, "insert", t, tbl) for s, t, tbl in _ROUTES],
-        "source_table string, operate_type string, sink_type string, sink_table string",
-    )
-    routed = route_cdc(ev, cfg)
+    routed = route_cdc(ev, _route_config(spark))
     return routed.select(
         "event_id",
         "user_id",

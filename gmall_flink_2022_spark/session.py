@@ -10,6 +10,14 @@ Design notes (100 TB posture, tested on local[N]):
   overridden (or left to AQE's ``coalescePartitions.initialPartitionNum``).
   Streaming queries start with ``DEFAULT_STATE_PARTITIONS`` instead
   (``streaming/runner.py``).
+- Persisted frames (``llm/cachereg.py::track``, the dedup
+  pre-collapses) are planned under AQE like any other plan:
+  ``canChangeCachedPlanOutputPartitioning`` lets AQE coalesce a cached
+  plan's output partitions. With Spark's default (false) every scan of
+  a ~100 KB persisted frame ran 32 tasks: ``training_shards`` on 400
+  docs at ``local[4]`` ran 621 tasks for 0.8 MB of shuffle, 64 with it.
+  No serving or ingest path persists a frame, so only the curation
+  pipelines see the change.
 - Session timezone pinned to UTC so ``date_format``/``unix_timestamp``
   results are bit-identical to the DuckDB oracle on naive parquet
   timestamps. (The reference hardcodes +8 in DateTimeUtil.java:19; our
@@ -29,6 +37,9 @@ _DEFAULTS = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
+    # let AQE coalesce the shuffle partitions of a persisted frame's plan
+    # too (Spark leaves a cached plan's 32 partitions untouched by default)
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
     "spark.sql.session.timeZone": "UTC",
     # testdata parquet writes naive timestamps (isAdjustedToUTC=false);
     # Spark 4 would infer TIMESTAMP_NTZ, which withWatermark rejects and

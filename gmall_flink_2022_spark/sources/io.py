@@ -112,17 +112,20 @@ def read_stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     )
 
 
-def local_frame(spark: SparkSession, rows: Sequence[Sequence], ddl: str) -> DataFrame:
-    """A driver-built literal table (a config table, a trained artifact)
-    as a JVM ``LocalRelation``: actions on it run no Spark job. Built
-    from an Arrow table, which needs no Arrow session conf and keeps an
-    empty ``rows`` typed; ``spark.createDataFrame(<list>)`` instead makes
-    a Python-RDD ``LogicalRDD``, and every action on it runs a
-    Python-worker job."""
+def local_frame(
+    spark: SparkSession, rows: Sequence[Sequence], ddl: str | T.StructType
+) -> DataFrame:
+    """A driver-built literal table (a config table, a trained artifact,
+    a sentinel row, an empty result) as a JVM ``LocalRelation``: actions
+    on it run no Spark job. ``ddl`` is a DDL string or a ``StructType``.
+    Built from an Arrow table, which needs no Arrow session conf and
+    keeps an empty ``rows`` typed; ``spark.createDataFrame(<list>)``
+    instead makes a Python-RDD ``LogicalRDD``, and every action on it
+    runs a Python-worker job."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    schema = T.StructType.fromDDL(ddl)
+    schema = ddl if isinstance(ddl, T.StructType) else T.StructType.fromDDL(ddl)
     table = pa.Table.from_pylist(
         [dict(zip(schema.names, r)) for r in rows], schema=to_arrow_schema(schema)
     )

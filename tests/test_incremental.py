@@ -192,6 +192,37 @@ def test_incremental_index_never_moves(spark, sf_dir):
     }
 
 
+def test_decision_plan_signs_each_arrival_once(spark):
+    """AQE off: the broadcast arrival side of the bucket probe computes
+    each of the ``num_hashes`` MinHash values once. A ``WHERE mh0 IS NOT
+    NULL`` there was pushed below the signature projection, so the
+    filter tokenized and hashed every arrival a second time."""
+    store = _store(spark)
+    inc.build_dedup_index(store, _df(spark, CORPUS))
+    arrivals = _df(spark, [(9, CORPUS[0][1] + " more"), (10, "too short")])
+    prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        plan = inc._decide(
+            store, arrivals, "doc_id", "text", 3, 8, 2, 4
+        )._jdf.queryExecution().executedPlan()
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prev)
+    signed = []
+
+    def walk(node):
+        if node.getClass().getSimpleName() == "BroadcastExchangeExec":
+            n = node.toString().count("array_min(transform(")
+            if n:
+                signed.append(n)
+        kids = node.children()
+        for i in range(kids.size()):
+            walk(kids.apply(i))
+
+    walk(plan)
+    assert signed and all(n == 8 for n in signed), signed
+
+
 def test_ingest_job_budget(spark):
     """A warm arrival batch runs at most the measured number of Spark
     jobs: the arrival checkpoint, the decision checkpoint (its

@@ -1420,39 +1420,70 @@ def test_quality_classifier_semantics(spark):
 
 
 def test_bpe_merge_step_greedy_overlap(spark):
-    """The gaps-and-islands merge must implement GREEDY left-to-right
+    """The array-fold merge must implement GREEDY left-to-right
     semantics: in a run of k identical symbols under pair (a,a), merges
     land at offsets 0,2,4,... ("aaaa" -> "aa","aa"; "aaaaa" ->
-    "aa","aa","a"), and non-overlapping matches all merge."""
-    from gmall_flink_2022_spark.llm.bpe import _initial_symbols, merge_step
+    "aa","aa","a"), and non-overlapping matches all merge. Symbols that
+    SQL text or a regex would escape (quote, backslash, '|', '$') merge
+    like any other, and a merge list applies in order."""
+    from gmall_flink_2022_spark.llm.bpe import apply_merges, symbols
+    from gmall_flink_2022_spark.sources.io import local_frame
 
-    wf = spark.createDataFrame(
-        [("aaaa", 1), ("aaaaa", 1), ("abab", 1), ("banana", 1)],
-        "word string, freq long",
-    )
-    merged = merge_step(_initial_symbols(wf), "a", "a")
-    seqs = {
-        r["wid"]: r["seq"]
-        for r in merged.groupBy("wid")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "sym"))).alias("s"))
-        .select("wid", F.expr("transform(s, x -> x.sym)").alias("seq"))
-        .collect()
-    }
-    assert seqs["aaaa"] == ["aa", "aa"]
-    assert seqs["aaaaa"] == ["aa", "aa", "a"]
-    assert seqs["abab"] == ["a", "b", "a", "b"]  # no (a,a) pairs
-    assert seqs["banana"] == ["b", "a", "n", "a", "n", "a"]
+    words = ["aaaa", "aaaaa", "abab", "banana", "''''", "\\|\\|", "$$$", "|$|$"]
+    wf = local_frame(spark, [(w,) for w in words], "word string")
 
-    merged2 = merge_step(_initial_symbols(wf), "a", "b")
-    seqs2 = {
-        r["wid"]: r["seq"]
-        for r in merged2.groupBy("wid")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "sym"))).alias("s"))
-        .select("wid", F.expr("transform(s, x -> x.sym)").alias("seq"))
-        .collect()
-    }
+    def seqs(merges):
+        out = wf.select("word", apply_merges(symbols(F.col("word")), merges).alias("s"))
+        return {r["word"]: r["s"] for r in out.collect()}
+
+    seqs1 = seqs([("a", "a")])
+    assert seqs1["aaaa"] == ["aa", "aa"]
+    assert seqs1["aaaaa"] == ["aa", "aa", "a"]
+    assert seqs1["abab"] == ["a", "b", "a", "b"]  # no (a,a) pairs
+    assert seqs1["banana"] == ["b", "a", "n", "a", "n", "a"]
+
+    seqs2 = seqs([("a", "b")])
     assert seqs2["abab"] == ["ab", "ab"]
     assert seqs2["banana"] == ["b", "a", "n", "a", "n", "a"]
+
+    assert seqs([("'", "'")])["''''"] == ["''", "''"]
+    assert seqs([("\\", "|")])["\\|\\|"] == ["\\|", "\\|"]
+    assert seqs([("$", "$")])["$$$"] == ["$$", "$"]
+    assert seqs([("|", "$"), ("|$", "|$")])["|$|$"] == ["|$|$"]
+    assert seqs([])["|$|$"] == ["|", "$", "|", "$"]
+
+
+def test_bpe_job_counts(spark):
+    """Building ``bpe_apply`` over a local merge table runs no job (the
+    merges enter the plan as literals) and its action runs at most 2
+    (the word-count shuffle and the result); ``bpe_train`` runs its one
+    word-table checkpoint plus at most 2 jobs per merge, with no
+    per-merge checkpoint."""
+    from gmall_flink_2022_spark.llm import bpe, cachereg
+    from gmall_flink_2022_spark.sources.io import local_frame
+
+    from .test_table_catalog import _jobs_run_by
+
+    docs = local_frame(
+        spark,
+        [(1, "low lower lowest newer wider"), (2, "new newest widest lowly")],
+        "doc_id long, text string",
+    )
+    merges = local_frame(
+        spark,
+        [(1, "l", "o"), (2, "lo", "w"), (3, "e", "s")],
+        "step long, left_sym string, right_sym string",
+    )
+    built, rows = [], []
+    assert _jobs_run_by(spark, lambda: built.append(bpe.bpe_apply(docs, merges))) == 0
+    assert _jobs_run_by(spark, lambda: rows.extend(built[0].collect())) <= 2
+    assert {r["word"]: r["encoded"] for r in rows}["lowest"] == "low|es|t"
+
+    ckpt = _jobs_run_by(spark, lambda: cachereg.stage(bpe._word_symbols(docs, "text")))
+    trained = []
+    n = _jobs_run_by(spark, lambda: trained.extend(bpe.bpe_train(docs, n_merges=4).collect()))
+    assert len(trained) == 4
+    assert n <= ckpt + 2 * 4, (n, ckpt)
 
 
 def test_bpe_train_convergence_and_bounds(spark):

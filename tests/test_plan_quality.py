@@ -501,12 +501,13 @@ def test_registry_wide_no_row_python(spark, sf_dir):
     # each of these explains to ops<=2 with no join/exchange/python).
     # Their internals are plan-gated where the operators live
     # (test_dim_store, test_incremental, test_operators BPE/graph) and
-    # oracle-checked by test_oracle_parity.
+    # oracle-checked by test_oracle_parity. llm_bpe_apply is not one of
+    # them: it returns the lazy one-projection encode plan, gated here.
     MATERIALIZED_LEAF = {
         "llm_dedup_incremental", "llm_dedup_index_lifecycle",
         "llm_dup_clusters_vacuum", "llm_embed_dedup_incremental",
         "llm_dup_clusters_incremental", "llm_training_shards",
-        "llm_bpe_apply", "llm_bpe_train", "llm_pagerank_centrality",
+        "llm_bpe_train", "llm_pagerank_centrality",
     }
     offenders, arrow_offenders = [], []
     for name, q in plans.REGISTRY.items():

@@ -376,30 +376,30 @@ _bpe_words = st.lists(
     min_size=1,                                       # dense overlaps
     max_size=12,
 )
+# the same dense two-letter words, spelled in symbols that SQL text or a
+# regex would need to escape
+_BPE_ALPHABETS = ["ab", "'\\", "|$"]
 
 
 @settings(max_examples=8, deadline=None)
 @given(_bpe_words, st.sampled_from(["a", "b"]), st.sampled_from(["a", "b"]))
 def test_bpe_merge_step_equals_python_greedy(spark, words, left, right):
-    """The distributed gaps-and-islands merge must agree with the
-    sequential greedy reference on arbitrary words — including the
-    overlap-heavy a==b runs that make the set-based form subtle."""
-    from gmall_flink_2022_spark.llm.bpe import _initial_symbols, merge_step
+    """The array-fold merge must agree with the sequential greedy
+    reference on arbitrary words — including the overlap-heavy a==b runs
+    — in every alphabet, quote, backslash, '|' and '$' included."""
+    from gmall_flink_2022_spark.llm.bpe import apply_merges, symbols
+    from gmall_flink_2022_spark.sources.io import local_frame
 
-    wf = spark.createDataFrame(
-        [(w, i + 1) for i, w in enumerate(dict.fromkeys(words))],
-        "word string, freq long",
-    )
-    merged = merge_step(_initial_symbols(wf), left, right)
-    got = {
-        r["wid"]: r["seq"]
-        for r in merged.groupBy("wid")
-        .agg(F.expr("transform(array_sort(collect_list(struct(pos, sym))),"
-                    " x -> x.sym)").alias("seq"))
-        .collect()
-    }
-    for w in dict.fromkeys(words):
-        assert got[w] == _py_greedy_merge(list(w), left, right), (w, left, right)
+    for alphabet in _BPE_ALPHABETS:
+        tr = str.maketrans("ab", alphabet)
+        ws = list(dict.fromkeys(w.translate(tr) for w in words))
+        lt, rt = left.translate(tr), right.translate(tr)
+        merged = local_frame(spark, [(w,) for w in ws], "word string").select(
+            "word", apply_merges(symbols(F.col("word")), [(lt, rt)]).alias("seq")
+        )
+        got = {r["word"]: r["seq"] for r in merged.collect()}
+        for w in ws:
+            assert got[w] == _py_greedy_merge(list(w), lt, rt), (w, lt, rt)
 
 
 # --------------------------------------------------------- prefix filtering

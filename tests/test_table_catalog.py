@@ -100,9 +100,9 @@ def test_local_frames_run_no_job(spark, sf_dir):
     """Driver-built literal tables are JVM local relations: collecting
     one runs no Spark job, an empty one included, where a Python-list
     ``createDataFrame`` ran a Python-worker job on every action. Covers
-    the helper, the merge table ``bpe_train`` returns and the route
-    config table of ``dwd_db_route``."""
-    from gmall_flink_2022_spark.llm import bpe
+    the helper, the merge table ``bpe_train`` returns, the PSL rules
+    frame and the route config table of ``dwd_db_route``."""
+    from gmall_flink_2022_spark.llm import bpe, psl
     from gmall_flink_2022_spark.sources.io import local_frame
 
     ddl = "step long, left_sym string"
@@ -112,6 +112,7 @@ def test_local_frames_run_no_job(spark, sf_dir):
         "bpe_train": bpe.bpe_train(
             local_frame(spark, [("low lower lowest",)], "text string"), n_merges=2
         ),
+        "psl_rules": psl.psl_rules_df(spark),
     }
     assert _fields(frames["empty"].schema) == ["step:bigint", "left_sym:string"]
     rows = {}
@@ -122,6 +123,7 @@ def test_local_frames_run_no_job(spark, sf_dir):
     assert jobs == dict.fromkeys(frames, 0)
     assert rows["rows"] == [(1, "a"), (2, "b")] and rows["empty"] == []
     assert len(rows["bpe_train"]) == 2
+    assert sorted(map(tuple, rows["psl_rules"])) == sorted(psl.PSL_RULES)
     route = plans.REGISTRY["dwd_db_route"].fn(spark, sf_dir)
     leaves = route._jdf.queryExecution().optimizedPlan().toString()
     assert "LocalRelation" in leaves and "LogicalRDD" not in leaves
