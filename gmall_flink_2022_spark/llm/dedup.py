@@ -147,66 +147,6 @@ def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-import collections as _collections
-import weakref as _weakref
-
-# Two-tier memo, both initialized at import (no lazy-init race; the
-# remaining per-key race is benign — same probe, same answer):
-# 1. semantic tier — keyed by the ANALYZED plan's semanticHash, so a
-#    caller that re-CONSTRUCTS the same source frame (a fresh
-#    read_table per query run — the bench/pipeline shape) still hits
-#    the memo instead of re-paying the corpus scan (measured: the
-#    probe re-scan was the whole llm_dedup_minhash r5->r6 regression,
-#    0.93 -> 1.43 s at sf0.1). Bounded FIFO so long sessions can't
-#    grow it without bound. Staleness trade, documented: if the SAME
-#    plan re-reads files whose contents changed, the cached decision
-#    survives — safe, because the decision only picks between two
-#    correct physical strategies (collapse vs not), never semantics.
-# 2. object tier — WeakKeyDictionary fallback for frames whose plan
-#    can't produce a semantic hash (local relations in odd states).
-#
-# Freshness (r7 ADVICE): the semantic hash identifies the PLAN, not the
-# bytes under it — a DimStore table re-read after an upsert has the same
-# plan but different contents. The key therefore also folds in a
-# fingerprint of the plan's input files (parquet part files are
-# content-addressed-ish: every rewrite lands new part names), so a
-# source rewritten in-session gets a fresh probe instead of the stale
-# collapse decision. Callers that mutate sources through a channel that
-# preserves file names can force it with invalidate_pre_dedup_cache().
-_PRE_DEDUP_SEM_CACHE: "_collections.OrderedDict[tuple, bool]" = (
-    _collections.OrderedDict()
-)
-_PRE_DEDUP_SEM_CACHE_MAX = 256
-_PRE_DEDUP_PROBE_CACHE: "_weakref.WeakKeyDictionary[DataFrame, dict]" = (
-    _weakref.WeakKeyDictionary()
-)
-
-
-def invalidate_pre_dedup_cache() -> None:
-    """Drop every memoized collapse decision — the explicit hook for
-    callers that rewrite a probed source in-session through a channel
-    the input-file fingerprint can't see (e.g. in-place file edits)."""
-    _PRE_DEDUP_SEM_CACHE.clear()
-    _PRE_DEDUP_PROBE_CACHE.clear()
-
-
-def _plan_sem_key(df: DataFrame):
-    """Semantic identity of the analyzed plan (None if unavailable):
-    (semanticHash, columns, input-file fingerprint). The file list is a
-    metadata call (no job); hashing it order-insensitively makes the key
-    stable across listing order while still changing whenever a source
-    dir is rewritten (new part-file names)."""
-    try:
-        files_fp = hash(frozenset(df.inputFiles()))
-        return (
-            df._jdf.queryExecution().analyzed().semanticHash(),
-            tuple(df.columns),
-            files_fp,
-        )
-    except Exception:
-        return None
-
-
 def _should_pre_dedup(
     df: DataFrame, digest: F.Column, min_dup_fraction: float = 0.05
 ) -> bool:
@@ -222,38 +162,18 @@ def _should_pre_dedup(
     executed still pays one corpus scan, and in composed pipelines it
     materializes the upstream chain during plan building. Accepted
     because the alternative (deciding collapse at action time) cannot
-    change the already-returned plan. The result is memoized by the
-    frame's SEMANTIC plan identity (falling back to object identity),
-    so neither several operators sharing one frame nor repeated
-    re-construction of the same source re-pay the scan."""
+    change the already-returned plan. No call site probes one frame
+    twice in one build, so each build probes the files as they are now."""
     if df.isStreaming:
         # no eager probe on an unbounded frame; the uncollapsed path is
         # always correct, and a streaming caller that KNOWS its corpus
         # is dup-heavy can pass pre_dedup=True explicitly
         return False
-    key = (str(digest), min_dup_fraction)
-    sem = _plan_sem_key(df)
-    if sem is not None:
-        sem_key = sem + key
-        if sem_key in _PRE_DEDUP_SEM_CACHE:
-            return _PRE_DEDUP_SEM_CACHE[sem_key]
-    per_frame = _PRE_DEDUP_PROBE_CACHE.setdefault(df, {})
-    if key in per_frame:
-        return per_frame[key]
     row = df.agg(
         F.count(F.lit(1)).alias("n"),
         F.approx_count_distinct(digest, 0.02).alias("d"),
     ).first()
-    if not row["n"]:
-        decision = False
-    else:
-        decision = (1.0 - row["d"] / row["n"]) >= min_dup_fraction
-    per_frame[key] = decision
-    if sem is not None:
-        _PRE_DEDUP_SEM_CACHE[sem + key] = decision
-        while len(_PRE_DEDUP_SEM_CACHE) > _PRE_DEDUP_SEM_CACHE_MAX:
-            _PRE_DEDUP_SEM_CACHE.popitem(last=False)
-    return decision
+    return bool(row["n"]) and (1.0 - row["d"] / row["n"]) >= min_dup_fraction
 
 
 def _exact_text_groups(df: DataFrame, id_col: str, text_col: str) -> DataFrame:

@@ -533,16 +533,16 @@ def llm_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(store.root, ignore_errors=True)
 
 
-# ----------------------------------- index lifecycle: vacuum + compaction
+# ----------------------------------- index lifecycle: vacuum + file cap
 # (r6 VERDICT ask #3) — the continuous-ingest lifecycle end-to-end:
-# bootstrap -> ingest batch 1 (index grows, auto-compaction keeps file
-# count bounded) -> VACUUM docs removed from the corpus -> decide batch
+# bootstrap -> ingest batch 1 (index grows, DimStore's file cap keeps
+# file count bounded) -> VACUUM docs removed from the corpus -> decide batch
 # 2 against the retained index. The oracle replays the same two rounds
 # against the equivalent logical corpus: round 2's corpus is
 # (corpus - removed) + batch-1 'new' docs — exactly what the vacuumed
 # index holds, because synthetic doc texts are per-doc unique (so every
-# digest row's canonical holder is the doc itself). Compaction is
-# covered implicitly: it must not change any decision.
+# digest row's canonical holder is the doc itself). A capped bucket
+# rewrite is covered implicitly: it must not change any decision.
 _LIFE_ORACLE = f"""
     WITH {_INC_SPLIT_SQL},
     {_inc_round_sql("r1", "corpus", "arrv")},
@@ -567,7 +567,7 @@ _LIFE_ORACLE = f"""
     "llm_dedup_index_lifecycle",
     oracle=_LIFE_ORACLE,
     survey_ref="extension: persisted-index LIFECYCLE (r6 VERDICT ask #3) "
-    "— ingest grows the index under auto-compaction (bounded file "
+    "— ingest grows the index under DimStore's file cap (bounded file "
     "count), vacuum_dedup_index drops removed docs' signature rows and "
     "their canonical digest rows, and the next batch's decisions see "
     "exactly the retained corpus: removed content re-registers, "
@@ -600,13 +600,7 @@ def llm_dedup_index_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    # every=2: the bootstrap is each table's 1st upsert and the ingest
-    # its 2nd, so auto-compaction still fires once per table inside the
-    # chain (the path stays driver-exercised) without compacting after
-    # the bootstrap too — the realistic every-N cadence
-    store = DimStore(
-        spark, tempfile.mkdtemp(prefix="gmall_dedup_life_"), auto_compact_every=2
-    )
+    store = DimStore(spark, tempfile.mkdtemp(prefix="gmall_dedup_life_"))
     try:
         inc.build_dedup_index(store, corpus)
         inc.ingest_with_dedup(store, arrivals)
@@ -3783,9 +3777,9 @@ _BPE_MERGES = 8
     survey_ref="extension: full BPE tokenizer training (Sennrich et al. "
     "2016) — iterates count -> argmax -> greedy merge -> re-tokenize "
     f"{_BPE_MERGES} times over the word-frequency symbol table; the same "
-    "iterative-BSP discipline as PageRank/star-CC (per-round lineage "
-    "checkpoint, one wid shuffle per round, O(1) driver scalars); oracle "
-    "is the identical algebra unrolled into materialized DuckDB CTEs",
+    "iterative-BSP discipline as PageRank/star-CC (one word-table "
+    "checkpoint, one pair-count shuffle per round, O(1) driver scalars); "
+    "oracle is the identical algebra unrolled into materialized DuckDB CTEs",
     tags=("llm", "text", "tokenizer", "iterative"),
     bench=True,
 )

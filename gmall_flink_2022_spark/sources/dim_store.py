@@ -27,11 +27,14 @@ joins re-read the dim per micro-batch.
 Scale note: per-batch work is O(dim_size * touched_buckets / n_buckets),
 not O(dim size) — a point update to one key rewrites one bucket, and an
 insert reads only the touched buckets' pk column, in one probe task.
-Inserts add a file per touched bucket, so a long-lived table needs
-``auto_compact_every`` (or ``compact_if_fragmented``) to bound its file
-count. Size n_buckets so a bucket fits comfortably in one task
-(reference dims — user/province/sku/spu/trademark/category — are small;
-for a 10^9-row user dim at 100 TB raise n_buckets accordingly).
+Inserts add a file per touched bucket until a touched bucket holds
+``MAX_FILES_PER_BUCKET`` files; that batch takes the merge path, which
+leaves one file per touched bucket, so a long-lived table's file count
+stays bounded and no caller picks a compaction cadence (the reference's
+Phoenix/HBase store compacts itself too). Size n_buckets so a bucket
+fits comfortably in one task (reference dims — user/province/sku/spu/
+trademark/category — are small; for a 10^9-row user dim at 100 TB
+raise n_buckets accordingly).
 """
 
 from __future__ import annotations
@@ -45,13 +48,21 @@ from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F, ty
 
 #: the table's schema, written beside its bucket dirs on every commit
 SCHEMA_FILE = "_schema.json"
+#: an upsert that touches a bucket already holding this many data files
+#: rewrites its buckets one file each: a scan runs a task per small file,
+#: traded against how often a bucket is rewritten
+MAX_FILES_PER_BUCKET = 4
+
+
+def _n_data_files(names) -> int:
+    return sum(1 for f in names if f.endswith(".parquet") and not f.startswith("."))
 
 
 class DimStore:
     """Directory-backed dim tables with bucketed upsert semantics.
 
     Crash atomicity (r7 ADVICE): every multi-bucket commit (upsert
-    insert or merge, compact, delete) is journaled — the fully-written
+    insert or merge, delete) is journaled — the fully-written
     source dir and the buckets it swaps, removes or adds files to are
     recorded in ``<table>.__journal`` (atomic write-then-rename) BEFORE
     the first bucket dir changes, and the journal is removed only after
@@ -64,23 +75,10 @@ class DimStore:
     need a lock around stage+journal+swap.
     """
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        root: str,
-        n_buckets: int = 16,
-        auto_compact_every: int | None = None,
-    ):
+    def __init__(self, spark: SparkSession, root: str, n_buckets: int = 16):
         self.spark = spark
         self.root = root
         self.n_buckets = n_buckets
-        # continuous-ingest lifecycle: every insert commit adds a part
-        # file to each bucket it touches, so file count per bucket grows
-        # with upsert count. With auto_compact_every=N, every Nth upsert
-        # OF A TABLE triggers compact(table) — file count stays bounded
-        # across unbounded ingest (the Delta/Iceberg OPTIMIZE analog).
-        self.auto_compact_every = auto_compact_every
-        self._upserts: dict[str, int] = {}
 
     def _path(self, table: str) -> str:
         return os.path.join(self.root, table)
@@ -170,7 +168,7 @@ class DimStore:
 
     def _recover(self, table: str) -> None:
         """Replay a committed-but-interrupted commit (journal present).
-        Runs at every entry point, so a crashed delete/compact/upsert
+        Runs at every entry point, so a crashed delete/upsert
         completes on the next touch instead of surfacing half-applied
         (resurrected, duplicated or missing) rows. If the completed
         replay leaves a table with no bucket dirs (a crash inside a
@@ -233,10 +231,12 @@ class DimStore:
           finds no staged key in the table, so the staged files are
           moved into their bucket dirs beside the files there — no
           bucket is rewritten;
-        - merge: a staged key exists (or the batch widens the schema),
+        - merge: a staged key exists, the batch widens the schema, or a
+          touched bucket already holds ``MAX_FILES_PER_BUCKET`` files,
           so the touched buckets are rewritten as table rows without a
           staged key plus the staged rows, one file per bucket, and
-          swapped into place.
+          swapped into place. The file cap is why no bucket dir ever
+          holds more than ``MAX_FILES_PER_BUCKET`` files after an upsert.
 
         Every commit writes the table's ``_schema.json``, which
         :meth:`read` and the merge read with."""
@@ -293,13 +293,20 @@ class DimStore:
             fits = all(
                 have.get(f.name) == f.dataType.simpleString() for f in batch.schema
             )
+            # a listing, not a job: when a touched bucket is at the cap,
+            # the merge below rewrites it and the clash probe is skipped
+            full = any(
+                _n_data_files(os.listdir(d)) >= MAX_FILES_PER_BUCKET
+                for d in (os.path.join(path, f"__bucket={b}") for b in affected)
+                if os.path.isdir(d)
+            )
             clash = current.select(pk).join(
                 F.broadcast(staged.select(pk)), pk, "left_semi"
             )
             # coalesce(1): one probe task, so isEmpty is one job however
             # many files the touched buckets hold (take(1) over N
             # partitions runs a job per 1, 4, 16, ... partitions)
-            if fits and clash.coalesce(1).isEmpty():
+            if fits and not full and clash.coalesce(1).isEmpty():
                 self._commit(table, stage, current.schema, adds=affected)
             else:
                 keep = current.join(staged.select(pk), on=pk, how="left_anti")
@@ -318,36 +325,6 @@ class DimStore:
                 )
                 self._commit(table, merge_dir, merged.schema, swaps=affected)
                 shutil.rmtree(stage, ignore_errors=True)
-        n = self._upserts[table] = self._upserts.get(table, 0) + 1
-        if self.auto_compact_every and n % self.auto_compact_every == 0:
-            self.compact(table)
-
-    def compact(self, table: str) -> None:
-        """Rewrite every bucket dir down to ~one file — the OPTIMIZE/
-        bin-packing half of the lifecycle story. Each insert commit adds
-        a file to every bucket it touches, so buckets fragment linearly
-        with ingest count; compaction is one bucket-partitioned shuffle
-        (each task owns a bucket, writes one file) followed by the same
-        journaled bucket-dir swap the merge path uses. O(table)
-        read+write, run every N upserts — amortized O(table/N) per
-        batch, the standard LSM/lakehouse trade."""
-        path = self._path(table)
-        if not self.exists(table):
-            return
-        df = self._scan(table)
-        out = f"{path}.__compact"
-        (
-            df.repartition(self.n_buckets, "__bucket")
-            .write.mode("overwrite")
-            .partitionBy("__bucket")
-            .parquet(out)
-        )
-        swaps = [
-            int(e.split("=", 1)[1])
-            for e in os.listdir(out)
-            if e.startswith("__bucket=")
-        ]
-        self._commit(table, out, df.schema, swaps=swaps)
 
     def delete(self, table: str, keys: DataFrame, pk: str = "id") -> None:
         """Retention: remove the rows whose ``pk`` appears in ``keys`` —
@@ -397,33 +374,11 @@ class DimStore:
                 "overwrite"
             ).parquet(os.path.join(path, "__bucket=0"))
 
-    def compact_if_fragmented(
-        self, table: str, max_files_per_bucket: int = 4
-    ) -> bool:
-        """Fragmentation-triggered compaction — the observability-driven
-        alternative to the every-N-upserts cadence: compact only when
-        the measured data-file count exceeds ``max_files_per_bucket``
-        per bucket on average (hot-bucket workloads fragment unevenly;
-        counting files targets actual fragmentation instead of upsert
-        count). Returns whether a compaction ran."""
-        if not self.exists(table):
-            return False
-        if self.file_count(table) > max_files_per_bucket * self.n_buckets:
-            self.compact(table)
-            return True
-        return False
-
     def file_count(self, table: str) -> int:
         """Data-file count across bucket dirs (lifecycle observability —
-        what the compaction chain test bounds)."""
+        what the file-cap test bounds)."""
         self._recover(table)
-        path = self._path(table)
-        total = 0
-        for dirpath, _dirs, files in os.walk(path):
-            total += sum(
-                1 for f in files if f.endswith(".parquet") and not f.startswith(".")
-            )
-        return total
+        return sum(_n_data_files(files) for _d, _s, files in os.walk(self._path(table)))
 
     # foreach_batch_upserter collects the distinct sink_table list (and
     # per-table column-name lists) to the driver each micro-batch. That is

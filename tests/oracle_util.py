@@ -1,12 +1,14 @@
 """Exact Spark-vs-DuckDB comparison used by the parity tests — a local
 mirror of the driver's correctness gate (row count + schema shape +
-order-insensitive exact value comparison)."""
+order-insensitive exact value comparison) — and ``jobs_run_by``, the
+Spark job counter that tests pin job budgets with."""
 
 from __future__ import annotations
 
 import datetime as dt
 import decimal
 import math
+import uuid
 
 import duckdb
 import pandas as pd
@@ -92,3 +94,20 @@ def compare(spark_df, sql: str, con: duckdb.DuckDBPyConnection) -> None:
     g, w = canonical_rows(got), canonical_rows(want)
     mism = [(a, b) for a, b in zip(g, w) if a != b]
     assert not mism, f"value mismatch ({len(mism)} rows), first: {mism[0]}"
+
+
+def jobs_run_by(spark, fn) -> int:
+    """Run ``fn`` under a fresh job group and count that group's jobs in
+    the driver's status store (populated with the UI off)."""
+    sc = spark.sparkContext
+    group = f"jobs_run_by_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    jobs = jsc.statusStore().jobsList(None)
+    groups = (jobs.apply(i).jobGroup() for i in range(jobs.size()))
+    return sum(1 for g in groups if g.isDefined() and g.get() == group)

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import json
 import os
+from collections import Counter
 
 import pytest
 from pyspark.sql import Row, functions as F
@@ -179,46 +180,26 @@ def test_upserter_sink_table_cardinality_guard(spark, tmp_path):
 
 
 def test_compact_bounds_file_count_across_ingest(spark, tmp_path):
-    """Lifecycle (r6 VERDICT ask #3a): without compaction the per-bucket
-    part-file count grows with every merge; with auto_compact_every the
-    file count stays bounded across >=5 ingest batches, and contents are
-    identical to the uncompacted store."""
-    from gmall_flink_2022_spark.llm import incremental as inc
+    """Lifecycle (r6 VERDICT ask #3a): all-insert batches add a file per
+    touched bucket until a touched bucket holds MAX_FILES_PER_BUCKET
+    files; that batch rewrites its buckets one file each. Across
+    2 x cap batches no bucket dir ever holds more than the cap, the
+    rewrite fires, and the rows are the batches' union."""
+    from gmall_flink_2022_spark.sources.dim_store import MAX_FILES_PER_BUCKET
 
-    plain = DimStore(spark, str(tmp_path / "plain"), n_buckets=4)
-    auto = DimStore(
-        spark, str(tmp_path / "auto"), n_buckets=4, auto_compact_every=2
-    )
-    for store in (plain, auto):
-        inc.build_dedup_index(
-            store,
-            spark.createDataFrame(
-                [(i, f"seed document number {i} about topic {i % 3} ok")
-                 for i in range(8)],
-                "doc_id long, text string",
-            ),
-        )
-    for b in range(5):
-        batch = spark.createDataFrame(
-            [(100 + 10 * b + j, f"fresh content {b}-{j} never seen with words")
-             for j in range(4)],
-            "doc_id long, text string",
-        )
-        for store in (plain, auto):
-            inc.ingest_with_dedup(store, batch)
-    # compaction actually bounds growth: per-bucket ~1 file vs the
-    # fragmented store's strictly larger count
-    assert auto.file_count(inc.SIG_TABLE) < plain.file_count(inc.SIG_TABLE)
-    assert auto.file_count(inc.SIG_TABLE) <= 2 * auto.n_buckets
-    assert auto.file_count(inc.DIGEST_TABLE) <= 2 * auto.n_buckets
-    # and loses nothing
-    for t in (inc.SIG_TABLE, inc.DIGEST_TABLE):
-        a = sorted(map(tuple, auto.read(t).collect()))
-        p = sorted(map(tuple, plain.read(t).collect()))
-        assert a == p, t
-    # one more explicit compact is idempotent
-    auto.compact(inc.SIG_TABLE)
-    assert auto.file_count(inc.SIG_TABLE) <= 2 * auto.n_buckets
+    store = DimStore(spark, str(tmp_path / "dim"), n_buckets=4)
+    want = {}
+    most, total = [], []  # after each upsert: the fullest bucket's files, all files
+    for b in range(2 * MAX_FILES_PER_BUCKET):
+        rows = [(100 * b + j, f"v{b}-{j}") for j in range(12)]
+        store.upsert("tab", spark.createDataFrame(rows, "id long, val string"), pk="id")
+        want.update(rows)
+        per = Counter(os.path.dirname(f) for f in _bucket_files(store, "tab"))
+        most.append(max(per.values()))
+        total.append(sum(per.values()))
+    assert max(most) == MAX_FILES_PER_BUCKET
+    assert any(b < a for a, b in zip(total, total[1:]))  # a capped batch rewrote
+    assert {r["id"]: r["val"] for r in store.read("tab").collect()} == want
 
 
 def test_delete_is_partition_pruned_and_vacuum_wires_to_index(spark, tmp_path):
@@ -288,28 +269,6 @@ def test_delete_every_row_leaves_readable_empty_table(spark, tmp_path):
     # the index survives a full vacuum: next upsert and read work
     store.upsert("tab", spark.createDataFrame([(9, "x")], "id long, val string"), pk="id")
     assert [tuple(r) for r in store.read("tab").collect()] == [(9, "x")]
-    # compact on the empty/refilled table is safe too
-    store.compact("tab")
-    assert store.read("tab").count() == 1
-
-
-def test_compact_if_fragmented_thresholds(spark, tmp_path):
-    """Fragmentation-triggered compaction: below the per-bucket file
-    threshold it is a no-op; above it it compacts and reports True."""
-    store = DimStore(spark, str(tmp_path / "frag"), n_buckets=2)
-    rows = lambda lo: spark.createDataFrame(
-        [(i, f"v{i}") for i in range(lo, lo + 4)], "id long, val string"
-    )
-    store.upsert("tab", rows(0), pk="id")
-    assert store.compact_if_fragmented("tab", max_files_per_bucket=50) is False
-    for b in range(1, 7):
-        store.upsert("tab", rows(b * 10), pk="id")
-    frag = store.file_count("tab")
-    assert frag > 2 * store.n_buckets  # genuinely fragmented
-    assert store.compact_if_fragmented("tab", max_files_per_bucket=2) is True
-    assert store.file_count("tab") < frag
-    assert store.read("tab").count() == 4 * 7
-    assert store.compact_if_fragmented("missing") is False
 
 
 # ------------------------------------------------- r8: journaled bucket swaps
@@ -380,17 +339,28 @@ def test_upsert_crash_mid_swap_recovers_without_duplicates(spark, tmp_path, monk
 
 
 def test_compact_crash_mid_swap_recovers(spark, tmp_path, monkeypatch):
-    import pytest
+    """A crash inside the bucket rewrite that the file cap triggers
+    leaves a journal; the next touch completes it with no row duplicated
+    or lost, one file per bucket."""
+    from gmall_flink_2022_spark.sources.dim_store import MAX_FILES_PER_BUCKET
 
     store = DimStore(spark, str(tmp_path / "dim"), n_buckets=8)
-    for i in range(4):  # fragment the buckets a bit
-        store.upsert("t", _users(spark), pk="id")
-    before = sorted(map(tuple, store.read("t").collect()))
+    batches = [
+        [(100 * b + i, f"u{b}-{i}") for i in range(40)]
+        for b in range(MAX_FILES_PER_BUCKET + 1)
+    ]
+    for rows in batches[:-1]:  # the buckets fill to the cap
+        store.upsert("t", spark.createDataFrame(rows, "id long, name string"), pk="id")
     _crashy_apply(monkeypatch)
     with pytest.raises(RuntimeError, match="simulated crash"):
-        store.compact("t")
+        store.upsert(
+            "t", spark.createDataFrame(batches[-1], "id long, name string"), pk="id"
+        )
+    assert os.path.isfile(store._journal_path("t"))
     monkeypatch.undo()
-    assert sorted(map(tuple, store.read("t").collect())) == before
+    got = sorted((r["id"], r["name"]) for r in store.read("t").collect())
+    assert got == sorted(r for rows in batches for r in rows)
+    assert store.file_count("t") == store.n_buckets  # the rewrite, not an insert
 
 
 def test_delete_all_crash_recovery_drops_table(spark, tmp_path, monkeypatch):
@@ -499,7 +469,7 @@ def test_read_with_schema_file_runs_no_job(spark, tmp_path):
     """Every commit writes ``_schema.json``; a read with it runs no
     schema-inference job, and a table without it still reads (by
     inference)."""
-    from .test_table_catalog import _jobs_run_by
+    from .oracle_util import jobs_run_by
 
     store = DimStore(spark, str(tmp_path / "dim"), n_buckets=4)
     store.upsert("t", _users(spark, 8), pk="id")
@@ -508,7 +478,34 @@ def test_read_with_schema_file_runs_no_job(spark, tmp_path):
     )
     schema_file = os.path.join(store._path("t"), "_schema.json")
     assert os.path.isfile(schema_file)
-    assert _jobs_run_by(spark, lambda: store.read("t")) == 0
+    assert jobs_run_by(spark, lambda: store.read("t")) == 0
     assert store.read("t").columns == ["id", "name"]
     os.remove(schema_file)
     assert sorted(r["id"] for r in store.read("t").collect()) == list(range(8))
+
+
+def test_capped_rewrite_runs_no_more_jobs_than_a_clash_merge(spark, tmp_path):
+    """An all-insert upsert that hits the file cap takes the merge path
+    without the clash probe, so it runs fewer jobs than an upsert that
+    updates keys of the same bucket, and both leave one file."""
+    from gmall_flink_2022_spark.sources.dim_store import MAX_FILES_PER_BUCKET
+
+    from .oracle_util import jobs_run_by
+
+    store = DimStore(spark, str(tmp_path / "dim"), n_buckets=1)
+
+    def upsert(b, name):
+        rows = [(100 * b + i, name) for i in range(4)]
+        store.upsert("t", spark.createDataFrame(rows, "id long, name string"), pk="id")
+
+    for b in range(MAX_FILES_PER_BUCKET):
+        upsert(b, "v1")
+    assert store.file_count("t") == MAX_FILES_PER_BUCKET
+    capped = jobs_run_by(spark, lambda: upsert(MAX_FILES_PER_BUCKET, "v1"))
+    assert store.file_count("t") == 1
+    clash = jobs_run_by(spark, lambda: upsert(0, "v2"))
+    assert store.file_count("t") == 1
+    assert capped < clash, (capped, clash)
+    rows = {r["id"]: r["name"] for r in store.read("t").collect()}
+    assert len(rows) == 4 * (MAX_FILES_PER_BUCKET + 1)
+    assert {rows[i] for i in range(4)} == {"v2"}

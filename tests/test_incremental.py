@@ -230,7 +230,7 @@ def test_ingest_job_budget(spark):
     write plus a one-task clash probe. The split was 1 + 6 + 5 + 4 on
     the fixture below, against 33 before the decision plan and the
     insert commit."""
-    from .test_table_catalog import _jobs_run_by
+    from .oracle_util import jobs_run_by
 
     store = _store(spark)
     inc.build_dedup_index(store, _df(spark, CORPUS))
@@ -243,7 +243,7 @@ def test_ingest_job_budget(spark):
         (82, CORPUS[2][1]),
     ])
     out = []
-    n = _jobs_run_by(spark, lambda: out.append(inc.ingest_with_dedup(store, batch)))
+    n = jobs_run_by(spark, lambda: out.append(inc.ingest_with_dedup(store, batch)))
     got = {r["doc_id"]: r["dup_kind"] for r in out[0].collect()}
     assert got == {80: "new", 81: "near", 82: "exact"}
     assert n <= 16, n

@@ -1206,30 +1206,6 @@ def test_pre_dedup_auto_probe(spark, sf_dir):
     assert _should_pre_dedup(dup_heavy, F.md5(F.col("text"))) is True
 
 
-def test_pre_dedup_probe_memoized(spark, sf_dir, monkeypatch):
-    """Repeat probes of the SAME frame (curate_full feeds one survivor
-    frame to several near-dup operators) must not rescan: the second
-    call is served from the per-frame memo without calling .agg."""
-    from gmall_flink_2022_spark.llm.dedup import _should_pre_dedup
-    from gmall_flink_2022_spark.sources.io import read_table
-
-    docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
-    first = _should_pre_dedup(docs, F.md5(F.col("text")))
-
-    def boom(self, *a, **k):  # pragma: no cover - should never run
-        raise AssertionError("probe rescanned a memoized frame")
-
-    # patch the concrete class (pyspark.sql.DataFrame is the abstract
-    # base in Spark 4; the classic subclass defines its own agg)
-    monkeypatch.setattr(type(docs), "agg", boom)
-    assert _should_pre_dedup(docs, F.md5(F.col("text"))) is first
-    # a different digest expression on the same frame IS a fresh probe
-    import pytest as _pytest
-
-    with _pytest.raises(AssertionError):
-        _should_pre_dedup(docs, F.md5(F.concat(F.col("text"), F.lit("x"))))
-
-
 def test_simhash_pairs_pre_dedup_equivalence(spark, sf_dir):
     from gmall_flink_2022_spark.llm import dedup
 
@@ -1462,7 +1438,7 @@ def test_bpe_job_counts(spark):
     from gmall_flink_2022_spark.llm import bpe, cachereg
     from gmall_flink_2022_spark.sources.io import local_frame
 
-    from .test_table_catalog import _jobs_run_by
+    from .oracle_util import jobs_run_by
 
     docs = local_frame(
         spark,
@@ -1475,13 +1451,13 @@ def test_bpe_job_counts(spark):
         "step long, left_sym string, right_sym string",
     )
     built, rows = [], []
-    assert _jobs_run_by(spark, lambda: built.append(bpe.bpe_apply(docs, merges))) == 0
-    assert _jobs_run_by(spark, lambda: rows.extend(built[0].collect())) <= 2
+    assert jobs_run_by(spark, lambda: built.append(bpe.bpe_apply(docs, merges))) == 0
+    assert jobs_run_by(spark, lambda: rows.extend(built[0].collect())) <= 2
     assert {r["word"]: r["encoded"] for r in rows}["lowest"] == "low|es|t"
 
-    ckpt = _jobs_run_by(spark, lambda: cachereg.stage(bpe._word_symbols(docs, "text")))
+    ckpt = jobs_run_by(spark, lambda: cachereg.stage(bpe._word_symbols(docs, "text")))
     trained = []
-    n = _jobs_run_by(spark, lambda: trained.extend(bpe.bpe_train(docs, n_merges=4).collect()))
+    n = jobs_run_by(spark, lambda: trained.extend(bpe.bpe_train(docs, n_merges=4).collect()))
     assert len(trained) == 4
     assert n <= ckpt + 2 * 4, (n, ckpt)
 
@@ -1937,11 +1913,9 @@ def test_rare_token_score_cache_aside_sees_sketch_updates(spark, tmp_path):
 
 
 def test_pre_dedup_memo_refreshes_on_source_rewrite(spark, tmp_path):
-    """r7 ADVICE (dedup.py memo freshness): the collapse-decision memo is
-    keyed by the plan's SEMANTIC hash, which survives a rewrite of the
-    files underneath — the input-file fingerprint in the key must give a
-    rewritten source a FRESH probe (unique -> dup-heavy corpus flips the
-    decision in-session)."""
+    """r7 ADVICE (dedup.py probe freshness): a source rewritten in-session
+    keeps its plan (same path, same schema) but must get a FRESH probe,
+    so a unique -> dup-heavy corpus flips the collapse decision."""
     from gmall_flink_2022_spark.llm import dedup
 
     path = str(tmp_path / "corpus")
@@ -1959,21 +1933,8 @@ def test_pre_dedup_memo_refreshes_on_source_rewrite(spark, tmp_path):
     )
     heavy.write.mode("overwrite").parquet(path)
     df2 = spark.read.parquet(path)
-    # identical plan (same path, same schema) — only the bytes changed;
-    # the fingerprint must force a re-probe and flip the decision
+    # identical plan (same path, same schema) — only the bytes changed
     assert dedup._should_pre_dedup(df2, F.md5(F.col("text"))) is True
-
-
-def test_invalidate_pre_dedup_cache_clears_both_tiers(spark, sf_dir):
-    from gmall_flink_2022_spark.llm import dedup
-    from gmall_flink_2022_spark.sources.io import read_table
-
-    docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
-    dedup._should_pre_dedup(docs, F.md5(F.col("text")))
-    assert len(dedup._PRE_DEDUP_SEM_CACHE) > 0
-    dedup.invalidate_pre_dedup_cache()
-    assert len(dedup._PRE_DEDUP_SEM_CACHE) == 0
-    assert len(dedup._PRE_DEDUP_PROBE_CACHE) == 0
 
 
 def test_rare_token_score_rejects_grid_mismatch(spark):

@@ -1139,20 +1139,26 @@ def _restart_case(name):
 def test_stateful_operator_restart_equivalence(spark, tmp_path, name):
     """Restart equivalence: two file batches, the second after a restart
     from the checkpoint the caller passes, settle to the same rows as
-    one run over both files and as the batch rendering."""
+    one run over both files and as the batch rendering, and no
+    micro-batch of either run drops a row by the watermark."""
     schema, rows1, rows2, op, mode, key_width, batch = _restart_case(name)
     in_dir = str(tmp_path / "in")
+    dropped = []  # rows dropped by the watermark, one entry per micro-batch
 
     def run(checkpoint=None):
         # the single run reads both files in one micro-batch
         sdf = spark.readStream.schema(schema).parquet(in_dir)
         got = []
-        run_available_now(
+        query = run_available_now(
             op(sdf),
             lambda w: w.outputMode(mode).foreachBatch(
                 lambda b, _: got.extend(map(tuple, b.collect()))
             ),
             checkpoint,
+        )
+        dropped.extend(
+            sum(o.numRowsDroppedByWatermark for o in p.stateOperators)
+            for p in query.recentProgress
         )
         return got
 
@@ -1175,3 +1181,4 @@ def test_stateful_operator_restart_equivalence(spark, tmp_path, name):
     )
     assert settle(restarted) == settle(single) == want
     assert want
+    assert dropped and not any(dropped)

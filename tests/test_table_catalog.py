@@ -8,13 +8,14 @@ import os
 import subprocess
 import sys
 import textwrap
-import uuid
 
 import pytest
 
 from gmall_flink_2022_spark import plans
 from gmall_flink_2022_spark.schemas import TABLE_SCHEMAS
 from gmall_flink_2022_spark.sources.io import TABLES, read_stream_table
+
+from .oracle_util import jobs_run_by
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -40,23 +41,6 @@ def test_table_catalog_matches_files(spark, sf_dir, sf):
         assert _fields(declared) == _fields(inferred), (sf, name)
 
 
-def _jobs_run_by(spark, fn) -> int:
-    """Run ``fn`` under a fresh job group and count that group's jobs in
-    the driver's status store (populated with the UI off)."""
-    sc = spark.sparkContext
-    group = f"catalog_{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    jsc = sc._jsc.sc()
-    jsc.listenerBus().waitUntilEmpty()
-    jobs = jsc.statusStore().jobsList(None)
-    groups = (jobs.apply(i).jobGroup() for i in range(jobs.size()))
-    return sum(1 for g in groups if g.isDefined() and g.get() == group)
-
-
 def test_builds_run_no_job(spark, sf_dir):
     """Building a serving query (the warehouse entries minus the TPC-H
     shapes) and opening a table stream run no Spark job."""
@@ -65,10 +49,10 @@ def test_builds_run_no_job(spark, sf_dir):
         if q.fn.__module__.endswith(".warehouse") and not q.name.startswith("tpch_")
     ]
     assert len(serving) == 16
-    built = {q.name: _jobs_run_by(spark, lambda q=q: q.fn(spark, sf_dir)) for q in serving}
+    built = {q.name: jobs_run_by(spark, lambda q=q: q.fn(spark, sf_dir)) for q in serving}
     assert built == dict.fromkeys(built, 0)
     opened = {
-        t: _jobs_run_by(spark, lambda t=t: read_stream_table(spark, sf_dir, t))
+        t: jobs_run_by(spark, lambda t=t: read_stream_table(spark, sf_dir, t))
         for t in TABLES
     }
     assert opened == dict.fromkeys(TABLES, 0)
@@ -117,7 +101,7 @@ def test_local_frames_run_no_job(spark, sf_dir):
     assert _fields(frames["empty"].schema) == ["step:bigint", "left_sym:string"]
     rows = {}
     jobs = {
-        k: _jobs_run_by(spark, lambda k=k: rows.update({k: frames[k].collect()}))
+        k: jobs_run_by(spark, lambda k=k: rows.update({k: frames[k].collect()}))
         for k in frames
     }
     assert jobs == dict.fromkeys(frames, 0)
